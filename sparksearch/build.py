@@ -129,7 +129,7 @@ def _tok_tf_kernel(text_col: str, id_col: str, code_aware: bool = False,
                 )
                 d = g["d"].to_numpy()
                 # lead: exactly one True row per document (its first posting)
-                # — lets per-DOC stats (n_docs, Σdl, doclens) ride the
+                # — lets per-DOC stats (n_docs, Σdl) ride the
                 # posting frame as map-only filters/Observations, no doc_id
                 # shuffle.
                 lead = np.empty(len(d), dtype=bool)
@@ -389,12 +389,11 @@ def finalize_index(
       job that materializes the postings cache — no separate doc-aggregate
       job, no doc_id exchange, one driver round-trip total. The ``lead``
       flag (one True per doc) makes the per-doc sums exact over posting rows.
-    * dl_df is a map-only ``filter(lead)`` projection of the cache.
-    * the encoded block frame is cached once and the three sinks (segments,
-      doclens, dictionary) are written by CONCURRENT driver threads — writes
-      overlap instead of serializing three commit barriers; the dictionary's
-      global block-max aggregates the cached blocks, not a re-read of the
-      just-written files.
+    * the encoded block frame is cached once and the sinks (segments,
+      dictionary, its sorted sidecars) are written by CONCURRENT driver
+      threads — writes overlap instead of serializing commit barriers; the
+      dictionary's global block-max aggregates the cached blocks, not a
+      re-read of the just-written files.
     * the only full-data exchange left in the whole build is the salted
       (term, range_id) repartition feeding the encoder (build_segments).
     """
@@ -472,18 +471,13 @@ def finalize_index(
             os.path.join(index_path, "segments")
         )
 
-    def _w_doclens():
-        # Doc-length sidecar (audits + rebuild checks; queries don't need it —
-        # blocks are self-contained via the dls stream).
-        dl_df.write.mode(mode).parquet(os.path.join(index_path, "doclens"))
-
     def _w_dictionary():
         dictionary.write.mode(mode).parquet(os.path.join(index_path, "dictionary"))
 
     def _w_dict_sidecars():
         write_dictionary_sidecars(dictionary, index_path, mode=mode)
 
-    writers = [_w_segments, _w_doclens, _w_dictionary, _w_dict_sidecars]
+    writers = [_w_segments, _w_dictionary, _w_dict_sidecars]
 
     with ThreadPoolExecutor(max_workers=len(writers)) as pool:
         futures = [pool.submit(w) for w in writers]

@@ -12,11 +12,12 @@ semantics are emulated with the ``parquet-manifest`` layout:
     <index>/manifest/unit_<u>.json           atomic (tmp + os.replace) commit
                                              record: lineage + metrics
     <index>/segments/gen=<g>/bucket=<b>/     finalized segment generations
-    <index>/doclens/gen=<g>/                 doc-length sidecar per generation
     <index>/dictionary_gen_<g>/              cumulative dictionary snapshot
     <index>/stats.json                       atomic COMMIT RECORD of the last
                                              finalize (totals + finalized
-                                             units + current dictionary dir)
+                                             units + current dictionary dir
+                                             + live generation count n_gens
+                                             + next_gen, the next unused id)
 
 Unit geometry (the round-3 incremental-merge design, SURVEY.md §3.3):
 units are CONTIGUOUS docID spans aligned to the segment range grid —
@@ -35,10 +36,13 @@ Crash model: a unit's parquet write and its manifest rename are ordered; a
 crash between them leaves an uncommitted (and overwrite-safe) unit dir, so a
 resume redoes at most one unit. Within a finalize, ``stats.json`` (atomic
 os.replace) is the commit record: artifacts of generation g (segments gen
-dir, doclens gen dir, dictionary snapshot) are rebuilt from scratch by the
-next finalize if stats.json never recorded them. Unit membership is derived
-from doc_id — deterministic across retries, cluster sizes and resumes
-(never rand()).
+dir, dictionary snapshots) are rebuilt from scratch by the next finalize if
+stats.json never recorded them. Generation ids come from ``next_gen`` and
+are never handed out twice — compaction folds the live generations into
+``gen=0`` and resets ``n_gens`` but not ``next_gen`` — so the id a finalize
+treats as a crash leftover can never name a live artifact. Unit membership
+is derived from doc_id — deterministic across retries, cluster sizes and
+resumes (never rand()).
 """
 
 from __future__ import annotations
@@ -53,7 +57,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .build import build_segments, finalize_index, tokenize_tf
+from .build import build_segments, tokenize_tf
 from .stats import doc_freq, with_idf
 
 
@@ -233,6 +237,16 @@ def build_unit(
     return rec
 
 
+def _next_gen(stats: dict) -> int:
+    """The id the next finalize gives its generation. A stats.json written
+    before ``next_gen`` existed lacks it; there every finalize named its
+    dictionary after its own generation, so the committed dictionary's id is
+    the last id handed out (compaction keeps the dictionary dir)."""
+    if "next_gen" in stats:
+        return int(stats["next_gen"])
+    return int(stats["dictionary_dir"].rsplit("_", 1)[1]) + 1
+
+
 def finalize_incremental(spark: SparkSession, index_path: str) -> dict:
     """Stage II, incremental (SURVEY.md §3.3 "segment_union + merge"):
     encode ONLY units committed since the last finalize, append them as a
@@ -261,32 +275,20 @@ def finalize_incremental(spark: SparkSession, index_path: str) -> dict:
         out["finalize_input_postings"] = 0
         return out
 
-    gen = int(prev["n_gens"]) if prev else 0
+    gen = _next_gen(prev) if prev else 0
     seg_root = os.path.join(index_path, "segments")
-    dl_root = os.path.join(index_path, "doclens")
     seg_gen = os.path.join(seg_root, f"gen={gen}")
-    dl_gen = os.path.join(dl_root, f"gen={gen}")
     dic_gen = os.path.join(index_path, f"dictionary_gen_{gen}")
     # Crash recovery: stats.json is the commit record — artifacts of an
     # unrecorded generation are leftovers of a crashed finalize; rebuild them.
     for leftover in (
-        seg_gen, dl_gen, dic_gen,
+        seg_gen, dic_gen,
         os.path.join(index_path, f"dict_sorted_gen_{gen}"),
         os.path.join(index_path, f"dict_rsorted_gen_{gen}"),
     ):
         shutil.rmtree(leftover, ignore_errors=True)
 
     tf_all = spark.read.parquet(os.path.join(index_path, "postings"))
-    if "dl" not in tf_all.columns or "lead" not in tf_all.columns:
-        # Units committed by a pre-dl code version: fall back to the legacy
-        # full finalize (flat layout) — correctness over incrementality.
-        cols = [c for c in ("term", "doc_id", "tf", "dl", "lead", "pos_blob")
-                if c in tf_all.columns]
-        return finalize_index(
-            spark, tf_all.select(*cols), index_path,
-            n_buckets=meta["n_buckets"], n_ranges=meta["n_ranges"],
-            block_size=meta["block_size"],
-        )
     # Positional mode is a per-index invariant (every unit's postings carry
     # pos_blob, build_unit with_positions) — the new generation's blocks then
     # fold positions as the 4th varint stream, same as a single-shot build.
@@ -337,7 +339,6 @@ def finalize_incremental(spark: SparkSession, index_path: str) -> dict:
     shutil.rmtree(tmp_seg, ignore_errors=True)
     seg_new.write.mode("overwrite").partitionBy("bucket").parquet(tmp_seg)
     os.rename(tmp_seg, seg_gen)
-    tf_new.filter("lead").select("doc_id", "dl").write.mode("overwrite").parquet(dl_gen)
 
     # Dictionary refresh: merge the COMMITTED cumulative snapshot with the
     # new units' term stats — df/cf sum, impact pair max/min (both decompose
@@ -392,7 +393,8 @@ def finalize_incremental(spark: SparkSession, index_path: str) -> dict:
         "n_ranges": int(meta["n_ranges"]),
         "n_buckets": int(meta["n_buckets"]),
         "block_size": int(meta["block_size"]),
-        "n_gens": gen + 1,
+        "n_gens": (int(prev["n_gens"]) if prev else 0) + 1,
+        "next_gen": gen + 1,
         "dictionary_dir": f"dictionary_gen_{gen}",
         "dict_sorted_dir": f"dict_sorted_gen_{gen}",
         "dict_rsorted_dir": f"dict_rsorted_gen_{gen}",
@@ -421,9 +423,10 @@ def compact_index(spark: SparkSession, index_path: str) -> dict:
     as-is, never decoded, never re-encoded, never shuffled by key (the
     partitionBy(bucket) write re-buckets rows into one file set per
     bucket). Decoded content, dictionary and stats are unchanged; only
-    n_gens collapses to 1. Crash-safe the same way finalize is: the new
-    generation dir is renamed into a fresh segments root, and stats.json
-    (atomic replace) is the commit point."""
+    n_gens collapses to 1 — next_gen keeps counting, so the next finalize
+    never reuses the id of the live dictionary. Crash-safe the same way
+    finalize is: the new generation dir is renamed into a fresh segments
+    root, and stats.json (atomic replace) is the commit point."""
     stats_path = os.path.join(index_path, "stats.json")
     with open(stats_path) as f:
         stats = json.load(f)

@@ -195,15 +195,6 @@ def decode_block(first_doc_id: int, doc_gaps: bytes, tfs: bytes):
     return ids, varint_decode(tfs).astype(np.int64)
 
 
-def decode_doc_ids(first_doc_id: int, doc_gaps: bytes) -> np.ndarray:
-    gaps = varint_decode(doc_gaps).astype(np.int64)
-    ids = np.empty(gaps.size + 1, dtype=np.int64)
-    ids[0] = first_doc_id
-    if gaps.size:
-        ids[1:] = first_doc_id + np.cumsum(gaps)
-    return ids
-
-
 def decode_blocks(first_doc_ids, doc_gaps_list, tfs_list):
     """Decode many blocks → concatenated (doc_ids, tfs)."""
     ids_parts, tf_parts = [], []

@@ -18,10 +18,18 @@ partition docID space and a document's postings for *every* term live in its
 range (build.py layout), so per-shard scores are complete. Within a shard the
 traversal is region-ordered block-max WAND: the block grid of the query's
 terms is overlaid into docID regions; each region's score upper bound is
-Σ_t qtf_t·blockmax_t(region); regions are visited in UB-descending order and
-traversal stops as soon as UB < θ − ε (θ = current kth score). Any unvisited
-document has score ≤ UB < θ, so it cannot enter the top-k even via the
-(score DESC, doc_id ASC) tie-break. WAND on/off is tested bit-identical.
+Σ_t qtf_t·blockmax_t(region); regions are visited in UB-descending order.
+
+The shard ranks by the engine's total order (round6(score) DESC, doc_id
+ASC), the same order the ``topk_per_query`` merge uses. round6 is monotone
+and moves a score by at most 5e-7 (+ ≤ 5e-10 from its 9-dp pre-quantize), so
+a document can tie or beat the kth candidate after rounding only if its raw
+score is ≥ θ − _TIE (θ = current kth RAW score). Hence the bounded
+candidate set keeps every score ≥ θ − _TIE, traversal stops once
+UB < θ − _TIE, and round6 is applied once, to the few survivors, for the
+final (round6 DESC, doc_id ASC) cut. (Cutting on the raw double would drop
+the lower doc_id of two scores that round6 to the same value.) WAND on/off
+is tested bit-identical.
 
 All per-posting work is NumPy over Arrow batches; the only Python-level loop
 is over *regions* (≥128 postings each), never rows (BASELINE.json:15).
@@ -37,8 +45,13 @@ from pyspark.sql import functions as F
 from . import BM25_B, BM25_K1
 from .build import load_index
 from .querying import topk_per_query
+from .stats import round6_np
 
-_EPS = 1e-12
+#: Raw-score margin within which two scores may tie or swap under round6:
+#: twice its largest move (half a 6th-decimal unit + the 9-dp pre-quantize),
+#: plus float noise in the UB sums.
+_TIE = 2 * (5e-7 + 5e-10) + 1e-12
+
 
 def attach_block_bound(qblocks: DataFrame, avgdl: float) -> DataFrame:
     """Derive each block's BM25 upper bound ``max_score`` from its stats-free
@@ -165,10 +178,10 @@ def _daat_group_fn(
             # --- bounded candidate set (the per-partition "min-heap")
             cand_ids = np.empty(0, np.int64)
             cand_sc = np.empty(0, np.float64)
-            theta = -np.inf
+            theta = -np.inf  # kth raw score among the candidates
             visited = 0
             for r in order:
-                if wand and ub[r] < theta - _EPS:
+                if wand and ub[r] < theta - _TIE:
                     break  # UB-descending order ⇒ nothing later can qualify
                 if eligible is not None and not eligible[r]:
                     continue  # a required term has no block here — no full match
@@ -198,7 +211,7 @@ def _daat_group_fn(
                 cand_sc = np.concatenate([cand_sc, usc])
                 if cand_ids.size > k:
                     theta = np.partition(cand_sc, cand_ids.size - k)[cand_ids.size - k]
-                    keep = cand_sc >= theta - _EPS  # keep ties for doc_id break
+                    keep = cand_sc >= theta - _TIE  # keep round6 ties for doc_id break
                     cand_ids, cand_sc = cand_ids[keep], cand_sc[keep]
                 elif cand_ids.size == k:
                     theta = cand_sc.min()
@@ -206,7 +219,7 @@ def _daat_group_fn(
             if visit_log is not None:
                 visit_log.append(visited)
             if cand_ids.size:
-                top = np.lexsort((cand_ids, -cand_sc))[:k]
+                top = np.lexsort((cand_ids, -round6_np(cand_sc)))[:k]
                 out_q.append(np.repeat(np.int64(qid), top.size))
                 out_d.append(cand_ids[top])
                 out_s.append(cand_sc[top])

@@ -338,44 +338,24 @@ def q_unknown_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Heap slack for the DAAT entries' round-then-tiebreak re-rank: the kernel's
-#: bounded heap keeps the top (K + slack) by RAW score; the catalog re-ranks
-#: that superset under the engine-wide quantized order (round6(score) DESC,
-#: doc_id ASC) so rank identity with the SQL oracle holds even when raw ULP
-#: noise straddles a 6-decimal tie at the cut (measured at sf0.1). 16 extra
-#: candidates cover any plausible tie run at the boundary.
-DAAT_RERANK_SLACK = 16
-
-
-def _daat_requantized(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
-    from pyspark.sql.window import Window
-
+def _daat_entry(spark: SparkSession, sf_dir: str, **kw) -> DataFrame:
     from .daat import daat_topk
 
-    idx = _index_for(spark, sf_dir)
-    df = daat_topk(spark, idx, reference_queries(), k=K + DAAT_RERANK_SLACK, **kw)
-    w = Window.partitionBy("query_id").orderBy(
-        _round6("score").desc(), F.asc("doc_id")
-    )
-    return (
-        df.select("query_id", "doc_id", "score")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K)
-        .select(
-            F.col("query_id").cast("long").alias("query_id"),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("doc_id").cast("long").alias("doc_id"),
-            _round6("score").alias("score"),
-        )
+    df = daat_topk(spark, _index_for(spark, sf_dir), reference_queries(), k=K, **kw)
+    return df.select(
+        F.col("query_id").cast("long").alias("query_id"),
+        F.col("rank").cast("long").alias("rank"),
+        F.col("doc_id").cast("long").alias("doc_id"),
+        _round6("score").alias("score"),
     )
 
 
 def q_daat_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _daat_requantized(spark, sf_dir, wand=True)
+    return _daat_entry(spark, sf_dir, wand=True)
 
 
 def q_daat_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _daat_requantized(spark, sf_dir, wand=True, conjunctive=True)
+    return _daat_entry(spark, sf_dir, wand=True, conjunctive=True)
 
 
 def q_index_decoded_postings(spark: SparkSession, sf_dir: str) -> DataFrame:

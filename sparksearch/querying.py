@@ -71,14 +71,8 @@ def py_parse_boosted(
     return rows
 
 
-def resolve_terms(qterms: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """Q1b: resolve query terms against the dictionary — broadcast hash join;
-    unknown terms silently drop (inner). ``unknown_terms`` reports them."""
-    return dictionary.join(F.broadcast(qterms), "term", "inner")
-
-
 def unknown_terms(qterms: DataFrame, dictionary: DataFrame) -> DataFrame:
-    """Left-anti twin of ``resolve_terms``: query terms absent from the corpus."""
+    """Query terms absent from the corpus (left anti join on the dictionary)."""
     return qterms.join(dictionary, "term", "left_anti")
 
 
@@ -661,24 +655,4 @@ def more_like_this(
     )
     return topk_per_query(scored, k).select(
         F.col("query_id").alias("seed_doc_id"), "rank", "doc_id", "score"
-    )
-
-
-def rank_identity_report(actual: DataFrame, expected: DataFrame, tol: float = 1e-9) -> DataFrame:
-    """Q7: mismatches between two (query_id, rank, doc_id, score) rankings —
-    empty result ⟺ rank-identical with |Δscore| ≤ tol."""
-    a = actual.select(
-        "query_id", "rank",
-        F.col("doc_id").alias("doc_id_a"), F.col("score").alias("score_a"),
-    )
-    e = expected.select(
-        "query_id", "rank",
-        F.col("doc_id").alias("doc_id_e"), F.col("score").alias("score_e"),
-    )
-    j = a.join(e, ["query_id", "rank"], "full_outer")
-    return j.filter(
-        F.col("doc_id_a").isNull()
-        | F.col("doc_id_e").isNull()
-        | (F.col("doc_id_a") != F.col("doc_id_e"))
-        | (F.abs(F.col("score_a") - F.col("score_e")) > tol)
     )

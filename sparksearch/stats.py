@@ -12,6 +12,7 @@ same formula — SURVEY.md §5.3):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -128,6 +129,28 @@ def round6(c) -> "Column":
     (catalog_pipeline._r6)."""
     col = c if not isinstance(c, str) else F.col(c)
     return F.round(col.cast("decimal(28,9)"), 6).cast("double")
+
+
+def round6_np(x: np.ndarray) -> np.ndarray:
+    """NumPy twin of ``round6`` — Spark's
+    ``round(cast(x as decimal(28,9)), 6)``, i.e. the shortest decimal repr of
+    the double, HALF_UP to 9 dp, then HALF_UP to 6 dp.
+
+    ``np.round(x, 6)`` equals that everywhere except near a 6th-decimal half,
+    where the 9-dp pre-quantize and binary noise can decide the direction;
+    those few values (within 1e-3 units of a half) take the exact Decimal
+    route. The DAAT kernel rounds only its ≤ k + ties survivors per shard and
+    query, so the slow path is rare."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    x = np.asarray(x, dtype=np.float64)
+    out = np.round(x, 6)
+    frac = np.abs(x) * 1e6 % 1.0
+    for i in np.flatnonzero(np.abs(frac - 0.5) < 1e-3):
+        d = Decimal(repr(float(x[i])))
+        d = d.quantize(Decimal("1e-9"), ROUND_HALF_UP)
+        out[i] = float(d.quantize(Decimal("1e-6"), ROUND_HALF_UP))
+    return out
 
 
 def zipf_fit(term_stats: DataFrame) -> DataFrame:

@@ -123,3 +123,61 @@ def test_conjunctive_region_prune_is_lossless_and_tighter(
         visits[flag] = sum(log)
     assert out[True] == out[False]
     assert visits[True] < visits[False], visits
+
+
+#: Adversarial round6 inputs: exact 6-dp halves (where plain ROUND(double, 6)
+#: was measured to disagree between engines), ULP neighbors of halves,
+#: negatives and assorted rationals.
+def _round6_cases():
+    import math
+
+    vals = []
+    for k in (1, 3, 7, 607001, 1214001, 1276719):
+        half = (2 * k + 1) / 2e6          # exact x.xxxxxx5 half
+        vals += [half, -half, math.nextafter(half, 0.0),
+                 math.nextafter(half, 2.0)]
+    vals += [i / 3.0 for i in range(1, 8)]
+    vals += [0.0, 1.0, -0.5563345 / 51 * 100]
+    return vals
+
+
+def test_kernel_round6_equals_spark_round6(spark):
+    """The DAAT kernel's NumPy round6 is bit-equal to stats.round6 — the
+    shard and the merge must apply the same total order."""
+    import numpy as np
+
+    from sparksearch.stats import round6_np
+    from sparksearch.stats import round6
+
+    rng = np.random.default_rng(3)
+    vals = _round6_cases() + [v - 4e-10 for v in _round6_cases()]
+    vals += list(rng.random(500) * 40)
+    df = spark.createDataFrame([(float(v),) for v in vals], "x double")
+    got = [r.y for r in df.select(round6("x").alias("y")).collect()]
+    assert list(round6_np(np.array(vals))) == got
+
+
+def test_daat_kernel_breaks_round6_ties_by_doc_id():
+    """The shard kernel ranks by the engine's total order
+    (round6(score) DESC, doc_id ASC), not by the raw double. Two docs whose
+    raw scores differ (doc 9: 2.1011460046, doc 5: 2.1011458839) but round6
+    to the same 2.101146: with k=1 the lower doc_id must win, with and
+    without WAND."""
+    import numpy as np
+    import pandas as pd
+
+    from sparksearch.codec import varint_encode
+    from sparksearch.daat import _daat_group_fn
+
+    # tf=1 and dl=avgdl make the BM25 factor exactly 1.0: score == idf.
+    one, dl = varint_encode(np.array([1])), varint_encode(np.array([10]))
+    frame = pd.DataFrame({
+        "query_id": [1, 1], "range_id": [0, 0], "term": ["a", "b"],
+        "first_doc_id": [5, 9], "last_doc_id": [5, 9],
+        "doc_gaps": [b"", b""], "tfs": [one, one], "dls": [dl, dl],
+        "qtf": [1, 1], "idf": [2.1011458839, 2.1011460046],
+        "max_score": [2.1011458839, 2.1011460046],
+    })
+    for wand in (True, False):
+        out = _daat_group_fn(1, 10.0, wand)(frame)
+        assert out["doc_id"].tolist() == [5], (wand, out)

@@ -3,6 +3,9 @@ metrics present; id determinism + sha256 invariant (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -179,6 +182,67 @@ def test_positional_resume_and_compaction(spark, docs_sf0001, tmp_path):
         return sorted(map(tuple, _decode_position_rows(seg).collect()))
 
     assert posrows(inc) == posrows(single)
+
+
+@pytest.mark.parametrize("stats_without_next_gen", [False, True])
+def test_finalize_after_compaction_matches_single_shot(
+    spark, docs_sf0001, queries, tmp_path, stats_without_next_gen
+):
+    """Generation ids never repeat: a finalize after compact_index must not
+    take the live dictionary's generation id for its own (and delete
+    dictionary_gen_<n> as a crash leftover). The lifecycle
+    units → finalize → unit → finalize → compact → unit → finalize ends in
+    the same decoded postings, dictionary and top-k answers as a
+    single-shot build with the same geometry — also when the compacted
+    index's stats.json predates the ``next_gen`` counter."""
+    from sparksearch.build import decoded_postings
+    from sparksearch.checkpoint import (
+        build_geometry,
+        build_unit,
+        compact_index,
+        finalize_incremental,
+    )
+    from sparksearch.daat import daat_topk
+
+    single = str(tmp_path / "single")
+    build_resumable(spark, docs_sf0001, single, n_units=4, n_buckets=8, n_ranges=4)
+
+    inc = str(tmp_path / "inc")
+    meta = build_geometry(spark, docs_sf0001, inc, 4, 4, 8, 128)
+    for u in (0, 1):
+        build_unit(spark, docs_sf0001, inc, u, meta["unit_span"])
+    finalize_incremental(spark, inc)
+    build_unit(spark, docs_sf0001, inc, 2, meta["unit_span"])
+    finalize_incremental(spark, inc)
+    assert compact_index(spark, inc)["n_gens"] == 1
+    if stats_without_next_gen:
+        stats_path = os.path.join(inc, "stats.json")
+        with open(stats_path) as f:
+            st = json.load(f)
+        del st["next_gen"]
+        with open(stats_path, "w") as f:
+            json.dump(st, f)
+    build_unit(spark, docs_sf0001, inc, 3, meta["unit_span"])
+    st = finalize_incremental(spark, inc)
+    assert st["n_gens"] == 2
+    assert st["finalized_units"] == [0, 1, 2, 3]
+
+    def decoded(path):
+        seg, _, _ = load_index(spark, path)
+        return sorted(map(tuple, decoded_postings(seg).collect()))
+
+    assert decoded(inc) == decoded(single)
+    _, dic1, s1 = load_index(spark, single)
+    _, dic2, s2 = load_index(spark, inc)
+    for key in ("n_docs", "sum_dl", "avgdl"):
+        assert s1[key] == s2[key], key
+    cols = ["term", "df", "cf", "idf", "max_tf", "min_dl", "bucket"]
+    assert sorted(map(tuple, dic1.select(cols).collect())) == sorted(
+        map(tuple, dic2.select(cols).collect())
+    )
+    a = sorted(map(tuple, daat_topk(spark, single, queries, k=10).collect()))
+    b = sorted(map(tuple, daat_topk(spark, inc, queries, k=10).collect()))
+    assert a == b and a
 
 
 def test_noop_resume(spark, docs_sf0001, tmp_path):
