@@ -75,6 +75,17 @@ _TID_SEGMENT_COLS = "tid long, " + SEGMENT_COLS.split(", ", 1)[1]
 _TID_SEGMENT_COLS_POS = "tid long, " + SEGMENT_COLS_POS.split(", ", 1)[1]
 
 
+def _write_json_atomic(path: str, obj: dict) -> None:
+    """Write ``obj`` to a temp file, then rename it over ``path``: a reader
+    sees the old file or the new one, never a partial write. stats.json is
+    an index's commit point, and each commit gives it a new file identity
+    (daat.py keys its index cache on that)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)  # atomic commit
+
+
 def _tok_tf_kernel(text_col: str, id_col: str, code_aware: bool = False,
                    with_positions: bool = False):
     """mapInPandas kernel: raw docs → exploded (doc_id, term, tf, dl) postings
@@ -502,8 +513,7 @@ def finalize_index(
     seg.unpersist()
     dictionary.unpersist()
     tf_df.unpersist()
-    with open(os.path.join(index_path, "stats.json"), "w") as f:
-        json.dump(stats, f)
+    _write_json_atomic(os.path.join(index_path, "stats.json"), stats)  # commit
     return stats
 
 

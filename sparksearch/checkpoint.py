@@ -57,7 +57,7 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .build import build_segments, tokenize_tf
+from .build import _write_json_atomic, build_segments, tokenize_tf
 from .stats import doc_freq, with_idf
 
 
@@ -65,13 +65,6 @@ def unit_col(id_col: str, unit_span: int):
     """Deterministic build-unit assignment: contiguous docID spans aligned
     to the range grid (module docstring) — unit = doc_id // unit_span."""
     return (F.col(id_col) / F.lit(int(unit_span))).cast("int")
-
-
-def _write_json_atomic(path: str, obj: dict) -> None:
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, path)  # atomic commit
 
 
 def build_geometry(

@@ -4,14 +4,25 @@ Physical query path (BASELINE.json:6: "document-at-a-time posting-list
 intersection with block-max WAND pruning and a bounded min-heap per
 partition"):
 
-  dictionary ⋈ broadcast(query terms)      — Q1: term resolution (BHJ)
-  segments.filter(bucket ∈ …, term ∈ …)    — Q2: partition-pruned, predicate-
-                                             pushed scan of exactly the query
-                                             terms' block rows
-  groupBy(range_id).applyInPandas(daat)    — Q3: per doc-range shard: decode,
-                                             score, block-max prune, bounded
-                                             top-k candidate set (≤ k + ties)
-  topk_per_query window                     — Q4: global merge of ≤ shards·k rows
+  cached index view                        — Q1: term resolution against the
+                                             driver-held dictionary of the
+                                             current commit point (no job)
+  segments.filter(bucket ∈ …, term ∈ …)    — Q2: ONE partition-pruned,
+                                             predicate-pushed fetch of exactly
+                                             the query terms' block rows
+  per doc-range shard kernel               — Q3: decode, score, block-max
+                                             prune, bounded top-k candidate
+                                             set (≤ k + ties); on the driver
+                                             (local) or in
+                                             groupBy(range_id).applyInPandas
+                                             (distributed)
+  (round6 DESC, doc_id ASC) merge          — Q4: of ≤ shards·k rows; NumPy
+                                             lexsort (local) or the
+                                             ``topk_per_query`` window
+
+``daat_topk`` picks the execution from Σ df of the resolved (query, term)
+rows: up to ``LOCAL_MAX_POSTINGS`` the fetch is one ``toPandas()`` job and
+the answer a LocalRelation; above it the shards run on the executors.
 
 Exactness of the pruning (rank-identity-critical, SURVEY.md §7.4.2): ranges
 partition docID space and a document's postings for *every* term live in its
@@ -37,6 +48,11 @@ is over *regions* (≥128 postings each), never rows (BASELINE.json:15).
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -53,6 +69,15 @@ from .stats import round6_np
 _TIE = 2 * (5e-7 + 5e-10) + 1e-12
 
 
+def _block_bound(idf, max_tf, min_dl, avgdl: float):
+    """BM25 upper bound of a block from its impact pair: one expression for
+    Spark Columns and NumPy arrays alike, so both execution paths compute
+    the same doubles."""
+    return idf * (max_tf * (BM25_K1 + 1.0)) / (
+        max_tf + BM25_K1 * ((1.0 - BM25_B) + BM25_B * min_dl / avgdl)
+    )
+
+
 def attach_block_bound(qblocks: DataFrame, avgdl: float) -> DataFrame:
     """Derive each block's BM25 upper bound ``max_score`` from its stats-free
     impact pair (max_tf, min_dl) — codec.py.
@@ -66,13 +91,7 @@ def attach_block_bound(qblocks: DataFrame, avgdl: float) -> DataFrame:
     exact-max design had."""
     return qblocks.withColumn(
         "max_score",
-        F.col("idf")
-        * (F.col("max_tf") * F.lit(BM25_K1 + 1.0))
-        / (
-            F.col("max_tf")
-            + F.lit(BM25_K1)
-            * (F.lit(1.0 - BM25_B) + F.lit(BM25_B) * F.col("min_dl") / F.lit(avgdl))
-        ),
+        _block_bound(F.col("idf"), F.col("max_tf"), F.col("min_dl"), avgdl),
     )
 
 
@@ -238,92 +257,190 @@ def _daat_group_fn(
     return daat
 
 
-def daat_topk(
-    spark: SparkSession,
-    index_path: str,
-    queries: list[tuple[int, str]],
-    k: int = 10,
-    wand: bool = True,
-    conjunctive: bool = False,
-) -> DataFrame:
-    """Top-k over a built index → DF[query_id, rank, doc_id, score].
+@dataclass(frozen=True)
+class _IndexView:
+    """What serving needs of one committed index, read once per commit
+    point: ``stats``, the ``segments`` DataFrame (its file listing is done)
+    and the dictionary's (bucket, idf, df) as NumPy columns indexed by
+    ``terms`` (a hash index: term → row)."""
 
-    ``conjunctive=True`` = posting-list intersection semantics: only docs
-    containing every resolved query term rank (tested identical to the
-    logical path querying.score_logical_conjunctive)."""
+    spark: SparkSession
+    key: tuple
+    stats: dict
+    segments: DataFrame
+    terms: pd.Index
+    bucket: np.ndarray
+    idf: np.ndarray
+    df: np.ndarray
+
+
+#: Index views by absolute index path, least recently used first.
+_VIEWS: OrderedDict[str, _IndexView] = OrderedDict()
+_VIEWS_LOCK = threading.Lock()
+_MAX_VIEWS = 8  # a test session builds many indexes; hold the recent ones
+
+
+def _index_view(spark: SparkSession, index_path: str) -> _IndexView:
+    """The cached view of ``index_path``, reloaded when its commit point
+    moved. Every commit (``build_index``, ``finalize_incremental``,
+    ``compact_index``) replaces stats.json atomically, so the file's
+    identity (inode, mtime, size) changes with it even when a rebuild at
+    the same path writes identical content over new part files; the
+    content completes the key for writers that rewrite the file in place.
+    One stat and one small read per call."""
+    with open(os.path.join(index_path, "stats.json"), "rb") as f:
+        st = os.fstat(f.fileno())
+        key = (st.st_ino, st.st_mtime_ns, st.st_size, f.read())
+    path = os.path.abspath(index_path)
+    with _VIEWS_LOCK:  # concurrent callers load a commit point once
+        view = _VIEWS.get(path)
+        if view is None or view.key != key or view.spark is not spark:
+            segments, dictionary, stats = load_index(spark, index_path)
+            dic = dictionary.select("term", "bucket", "idf", "df").toPandas()
+            view = _VIEWS[path] = _IndexView(
+                spark, key, stats, segments, pd.Index(dic["term"]),
+                dic["bucket"].to_numpy(np.int64), dic["idf"].to_numpy(np.float64),
+                dic["df"].to_numpy(np.int64),
+            )
+        _VIEWS.move_to_end(path)
+        while len(_VIEWS) > _MAX_VIEWS:
+            _VIEWS.popitem(last=False)
+        return view
+
+
+def _resolve(view: _IndexView, queries: list[tuple[int, str]]) -> pd.DataFrame:
+    """Q1: tokenize the queries on the driver and look their terms up in the
+    cached dictionary → one row per resolved (query, term), sorted by
+    (query_id, term): term, bucket, query_id, qtf, idf, df. Unknown terms
+    drop out."""
     from collections import Counter
 
     from .tokenize import py_tokenize
 
-    segments, dictionary, stats = load_index(spark, index_path)
-    # Q1 resolution: queries tokenize on the driver (they are a driver-side
-    # list already), and the dictionary lookup is ONE pushdown-filtered scan
-    # of the needed terms — no broadcast-join job for a |queries|·|terms|-
-    # sized result (the join ran a broadcast exchange + join stage only to
-    # produce rows we immediately collect; at vocab scale the isin predicate
-    # prunes the dictionary scan by row-group stats just as well).
-    qtf_map: dict[tuple[int, str], int] = {}
+    qids, terms, qtfs = [], [], []
     for qid, text in queries:
         for t, c in sorted(Counter(py_tokenize(text)).items()):
-            qtf_map[(int(qid), t)] = int(c)
-    needed = sorted({t for _, t in qtf_map})
-    dinfo = {
-        r["term"]: r
-        for r in dictionary.filter(F.col("term").isin(needed))
-        .select("term", "bucket", "idf", "df")
-        .collect()
-    } if needed else {}
-    rows = [
-        {
-            "term": t, "bucket": dinfo[t]["bucket"], "query_id": qid,
-            "qtf": qtf, "idf": dinfo[t]["idf"], "df": dinfo[t]["df"],
-        }
-        for (qid, t), qtf in sorted(qtf_map.items(), key=lambda kv: (kv[0][0], kv[0][1]))
-        if t in dinfo
-    ]
-    if not rows:
-        return spark.createDataFrame(
-            [], "query_id int, rank int, doc_id long, score double"
-        )
-    terms = sorted({r["term"] for r in rows})
-    buckets = sorted({int(r["bucket"]) for r in rows})
+            qids.append(int(qid))
+            terms.append(t)
+            qtfs.append(int(c))
+    pos = view.terms.get_indexer(terms) if terms else np.empty(0, np.int64)
+    hit = pos >= 0
+    pos = pos[hit]
+    q = pd.DataFrame({
+        "term": np.asarray(terms, dtype=object)[hit],
+        "bucket": view.bucket[pos],
+        "query_id": np.asarray(qids, dtype=np.int64)[hit],
+        "qtf": np.asarray(qtfs, dtype=np.int64)[hit],
+        "idf": view.idf[pos],
+        "df": view.df[pos],
+    })
+    # a query can repeat an id: keep the last text's terms, as a dict would
+    q = q.drop_duplicates(["query_id", "term"], keep="last")
+    return q.sort_values(["query_id", "term"], kind="stable", ignore_index=True)
 
-    # Q2: pruned fetch — bucket prunes parquet partitions, term pushes down.
-    # Explicit projection: a positional index carries the poss stream in the
-    # same rows (build.SEGMENT_COLS_POS); DAAT scores from tf/dl only, and
-    # the select keeps those bytes out of the scan AND the Arrow transfer
-    # into the group kernel (mapInPandas ships every input column).
-    blocks = segments.filter(
+
+#: Block columns the kernel reads. A positional index carries the poss
+#: stream in the same rows (build.SEGMENT_COLS_POS); DAAT scores from tf/dl
+#: only, and the projection keeps those bytes out of the scan and out of
+#: the Arrow transfer.
+_BLOCK_COLS = ("term", "range_id", "first_doc_id", "last_doc_id",
+               "doc_gaps", "tfs", "dls", "max_tf", "min_dl")
+
+
+def _pruned_blocks(view: _IndexView, qmeta: pd.DataFrame) -> DataFrame:
+    """Q2: the block rows of the resolved terms — bucket prunes parquet
+    partitions, term pushes down to the scan. Both execution paths read
+    exactly this DataFrame."""
+    buckets = sorted({int(b) for b in qmeta["bucket"]})
+    terms = sorted(set(qmeta["term"]))
+    return view.segments.filter(
         F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    ).select(
-        "term", "range_id", "first_doc_id", "last_doc_id",
-        "doc_gaps", "tfs", "dls", "max_tf", "min_dl",
-    )
-    qmeta = spark.createDataFrame(
-        [(r["term"], int(r["query_id"]), int(r["qtf"]), float(r["idf"])) for r in rows],
-        "term string, query_id int, qtf int, idf double",
-    )
-    avgdl = float(stats["avgdl"])
-    qblocks = attach_block_bound(blocks.join(F.broadcast(qmeta), "term"), avgdl)
+    ).select(*_BLOCK_COLS)
 
-    nreq = None
-    if conjunctive:
-        nreq = {}
-        for r in rows:
-            nreq[int(r["query_id"])] = nreq.get(int(r["query_id"]), 0) + 1
 
+#: Largest Σ df (over the resolved (query, term) rows) served on the driver.
+#: Above it the distributed path's parallel decode beats its fixed cost.
+#: Measured on a 4-vCPU host, local[4], a 40k-doc Zipf(1.3) corpus
+#: (n_ranges=8), batches of 2–4-term queries, median of 3 warm calls, local
+#: vs distributed seconds: Σdf 17k 0.51/1.24, 157k 1.06/1.49, 453k
+#: 2.71/3.22, 604k 2.25/2.87, 736k 2.08/1.82, 858k 2.55/2.38, 1.0M
+#: 3.95/3.27, 2.4M 8.31/4.28 — the crossover lies at 600–700k. perfbench's
+#: 60-query batch calls sum to Σdf ≈ 105–125k (seeds 1–5).
+LOCAL_MAX_POSTINGS = 500_000
+
+_RESULT_SCHEMA = "query_id long, rank int, doc_id long, score double"
+
+
+def _result(spark: SparkSession, pdf: pd.DataFrame | None = None) -> DataFrame:
+    """A pandas frame becomes a LocalRelation: collecting it runs no job."""
+    if pdf is None:
+        pdf = pd.DataFrame({
+            "query_id": pd.Series([], dtype="int64"),
+            "rank": pd.Series([], dtype="int32"),
+            "doc_id": pd.Series([], dtype="int64"),
+            "score": pd.Series([], dtype="float64"),
+        })
+    return spark.createDataFrame(pdf, _RESULT_SCHEMA)
+
+
+def _merge_topk(partial: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Q4 on the driver: per query, the first k shard candidates under the
+    engine's total order (round6(score) DESC, doc_id ASC) — the order
+    ``querying.topk_per_query`` applies on the distributed path."""
+    q = partial["query_id"].to_numpy(np.int64)
+    d = partial["doc_id"].to_numpy(np.int64)
+    s = partial["score"].to_numpy(np.float64)
+    order = np.lexsort((d, -round6_np(s), q))
+    q, d, s = q[order], d[order], s[order]
+    row = np.arange(q.size)
+    first = np.r_[True, q[1:] != q[:-1]]  # a query's first candidate
+    rank = row - np.maximum.accumulate(np.where(first, row, 0)) + 1
+    keep = rank <= k
+    return pd.DataFrame({
+        "query_id": q[keep], "rank": rank[keep].astype(np.int32),
+        "doc_id": d[keep], "score": s[keep],
+    })
+
+
+def _local_topk(view: _IndexView, qmeta: pd.DataFrame, k: int, wand: bool,
+                nreq: dict | None) -> pd.DataFrame | None:
+    """Q2–Q4 in one Spark job: fetch the pruned blocks to the driver and
+    run the shard kernel per range_id there."""
+    avgdl = float(view.stats["avgdl"])
+    blocks = _pruned_blocks(view, qmeta).toPandas()
+    qblocks = blocks.merge(qmeta[["term", "query_id", "qtf", "idf"]], on="term")
+    qblocks["max_score"] = _block_bound(
+        qblocks["idf"].to_numpy(np.float64),
+        qblocks["max_tf"].to_numpy(np.float64),
+        qblocks["min_dl"].to_numpy(np.float64),
+        avgdl,
+    )
+    fn = _daat_group_fn(k, avgdl, wand, nreq)
+    parts = [fn(g) for _, g in qblocks.groupby("range_id", sort=True)]
+    return _merge_topk(pd.concat(parts, ignore_index=True), k) if parts else None
+
+
+def _distributed_topk(spark: SparkSession, view: _IndexView, qmeta: pd.DataFrame,
+                      k: int, wand: bool, nreq: dict | None, work: int) -> DataFrame:
+    """Q2–Q4 on the executors: the pruned blocks join the query terms
+    (broadcast), shard by doc range, run the kernel per shard in
+    ``applyInPandas`` and merge through a window."""
+    avgdl = float(view.stats["avgdl"])
+    qdf = spark.createDataFrame(
+        qmeta[["term", "query_id", "qtf", "idf"]],
+        "term string, query_id long, qtf long, idf double",
+    )
+    qblocks = attach_block_bound(
+        _pruned_blocks(view, qmeta).join(F.broadcast(qdf), "term"), avgdl
+    )
     # Shard per (doc-range, query-shard): the group fn already handles any
     # number of queries per group (per-query θ/candidate set), so a finer key
     # changes no semantics — it balances shards (a hot range carrying every
-    # query's blocks was the 8-core straggler at 800k docs, ~17%). The shard
-    # count is ADAPTIVE, derived from the dictionary's df stats already on
-    # the driver: sharding only pays when per-range work is fat enough to
-    # amortize the extra Arrow groups' per-group overhead — at small corpora
-    # a static 4-way split quadrupled group count on tiny groups and
-    # regressed latency 34% (round-2 bench). Σ df over the resolved
-    # (query, term) rows IS the posting count the shards will decode.
-    work = sum(int(r["df"]) for r in rows)
-    per_range = work / max(int(stats.get("n_ranges", 1)), 1)
+    # query's blocks was the 8-core straggler at 800k docs, ~17%). Sharding
+    # only pays when per-range work is fat enough to amortize the extra
+    # Arrow groups' per-group overhead — at small corpora a static 4-way
+    # split quadrupled group count on tiny groups and regressed latency 34%.
+    per_range = work / max(int(view.stats.get("n_ranges", 1)), 1)
     n_qshards = max(1, min(4, int(per_range // QSHARD_MIN_POSTINGS)))
     if n_qshards > 1:
         grouped = qblocks.withColumn(
@@ -336,3 +453,32 @@ def daat_topk(
         "query_id long, doc_id long, score double",
     )
     return topk_per_query(partial, k)
+
+
+def daat_topk(
+    spark: SparkSession,
+    index_path: str,
+    queries: list[tuple[int, str]],
+    k: int = 10,
+    wand: bool = True,
+    conjunctive: bool = False,
+) -> DataFrame:
+    """Top-k over a built index → DF[query_id, rank, doc_id, score].
+
+    ``conjunctive=True`` = posting-list intersection semantics: only docs
+    containing every resolved query term rank (tested identical to the
+    logical path querying.score_logical_conjunctive).
+
+    Picks its own execution from Σ df of the resolved (query, term) rows —
+    the posting count the kernel will decode: up to ``LOCAL_MAX_POSTINGS``
+    the kernel runs on the driver and the result is a LocalRelation; above
+    it the shards run on the executors. Both give identical answers."""
+    view = _index_view(spark, index_path)
+    qmeta = _resolve(view, queries)
+    if qmeta.empty:
+        return _result(spark)
+    nreq = qmeta.groupby("query_id").size().to_dict() if conjunctive else None
+    work = int(qmeta["df"].sum())
+    if work > LOCAL_MAX_POSTINGS:
+        return _distributed_topk(spark, view, qmeta, k, wand, nreq, work)
+    return _result(spark, _local_topk(view, qmeta, k, wand, nreq))

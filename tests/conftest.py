@@ -32,6 +32,21 @@ def queries() -> list[tuple[int, str]]:
     return [(q["id"], q["text"]) for q in qs]
 
 
+@pytest.fixture
+def daat_paths(monkeypatch):
+    """Iterate to run a check once per ``daat_topk`` execution path: the
+    distributed one (no query is small enough for the driver), then the
+    local one (every query is)."""
+    from sparksearch import daat
+
+    def paths():
+        for name, limit in (("distributed", 0), ("local", 10**15)):
+            monkeypatch.setattr(daat, "LOCAL_MAX_POSTINGS", limit)
+            yield name
+
+    return paths
+
+
 @pytest.fixture(scope="session")
 def docs_sf0001(spark):
     return spark.read.parquet(str(SF_SMOKE / "documents.parquet"))

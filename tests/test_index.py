@@ -73,30 +73,39 @@ def _rankings(df):
     return out
 
 
-def test_daat_rank_identical_to_oracle(spark, index_sf001, queries, oracle_sf001):
+def test_daat_rank_identical_to_oracle(
+    spark, index_sf001, queries, oracle_sf001, daat_paths
+):
     path, _ = index_sf001
-    got = _rankings(daat_topk(spark, path, queries, k=K, wand=True))
-    n_nonempty = 0
-    for qid, text in queries:
-        expected = oracle_sf001.topk(text, K)
-        actual = got.get(qid, [])
-        assert len(actual) == len(expected), (qid, text)
-        for (rank, doc_id, score), (e_doc, e_score) in zip(actual, expected):
-            assert doc_id == e_doc, (qid, text, rank, doc_id, e_doc)
-            assert abs(score - e_score) <= TOL, (qid, text, rank)
-        n_nonempty += bool(expected)
-    assert n_nonempty >= 15  # the query set is mostly non-degenerate
+    for how in daat_paths():
+        got = _rankings(daat_topk(spark, path, queries, k=K, wand=True))
+        n_nonempty = 0
+        for qid, text in queries:
+            expected = oracle_sf001.topk(text, K)
+            actual = got.get(qid, [])
+            assert len(actual) == len(expected), (how, qid, text)
+            for (rank, doc_id, score), (e_doc, e_score) in zip(actual, expected):
+                assert doc_id == e_doc, (how, qid, text, rank, doc_id, e_doc)
+                assert abs(score - e_score) <= TOL, (how, qid, text, rank)
+            n_nonempty += bool(expected)
+        assert n_nonempty >= 15  # the query set is mostly non-degenerate
 
 
-def test_wand_on_off_identical(spark, index_sf001, queries):
+def test_wand_on_off_identical(spark, index_sf001, queries, daat_paths):
+    """WAND on equals WAND off, and the local path equals the distributed
+    one, bit for bit."""
     path, _ = index_sf001
-    a = _rankings(daat_topk(spark, path, queries, k=K, wand=True))
-    b = _rankings(daat_topk(spark, path, queries, k=K, wand=False))
-    assert set(a) == set(b)
-    for q in a:
-        assert [(r, d) for r, d, _ in a[q]] == [(r, d) for r, d, _ in b[q]]
-        for (_, _, sa), (_, _, sb) in zip(a[q], b[q]):
-            assert sa == sb  # bit-identical: pruning never changes arithmetic
+    runs = {}
+    for how in daat_paths():
+        for wand in (True, False):
+            runs[how, wand] = _rankings(daat_topk(spark, path, queries, k=K, wand=wand))
+    a = runs["distributed", True]
+    for key, b in runs.items():
+        assert set(a) == set(b), key
+        for q in a:
+            assert [(r, d) for r, d, _ in a[q]] == [(r, d) for r, d, _ in b[q]], key
+            for (_, _, sa), (_, _, sb) in zip(a[q], b[q]):
+                assert sa == sb, key  # pruning and placement never change arithmetic
 
 
 def test_deterministic_rebuild(spark, docs_sf001, index_sf001, tmp_path):
@@ -113,10 +122,15 @@ def test_deterministic_rebuild(spark, docs_sf001, index_sf001, tmp_path):
     assert d1 == d2  # byte-identical segments across rebuilds
 
 
-def test_empty_and_unknown_queries(spark, index_sf001):
+def test_empty_and_unknown_queries(spark, index_sf001, daat_paths):
     path, _ = index_sf001
-    res = daat_topk(spark, path, [(1, ""), (2, "zzz")], k=K)
-    assert res.count() == 0
+    for how in daat_paths():
+        for qs in ([(1, "")], [(1, ""), (2, "zzz")]):
+            res = daat_topk(spark, path, qs, k=K)
+            assert res.count() == 0, (how, qs)
+            assert res.schema.simpleString() == (
+                "struct<query_id:bigint,rank:int,doc_id:bigint,score:double>"
+            )
 
 
 def test_tokenize_tf_equals_declarative_twin(spark, docs_sf0001):

@@ -60,7 +60,9 @@ def test_positional_block_fetch_pushes_down_and_daat_skips_poss(
     positional fetch must prune the SAME way DAAT does — bucket partition
     filter + pushed In(term) — and DAAT's own scan must NOT read the poss
     bytes it never uses (explicit projection keeps them out of the scan and
-    the Arrow transfer)."""
+    the Arrow transfer). DAAT's scan is ``daat._pruned_blocks``, the one
+    fetch both of its execution paths read: a local-path answer is a bare
+    LocalTableScan with no segment scan left in its plan."""
     from sparksearch.build import build_index
     from sparksearch.phrase import _pruned_position_fetch
 
@@ -72,9 +74,12 @@ def test_positional_block_fetch_pushes_down_and_daat_skips_poss(
     assert "PartitionFilters" in plan and "bucket" in plan
     assert "PushedFilters" in plan and "In(term" in plan
 
-    from sparksearch.daat import daat_topk
+    from sparksearch import daat
 
-    dplan = _plan(daat_topk(spark, path, [(1, "hash join")], k=5))
+    view = daat._index_view(spark, path)
+    dplan = _plan(daat._pruned_blocks(view, daat._resolve(view, [(1, "hash join")])))
+    assert "PartitionFilters" in dplan and "bucket" in dplan
+    assert "PushedFilters" in dplan and "In(term" in dplan
     scans = [ln for ln in dplan.splitlines()
              if "ReadSchema" in ln and "doc_gaps" in ln]
     assert scans, dplan

@@ -45,7 +45,9 @@ def test_scores_strictly_ordered(spark, docs_sf001, oracle_sf001, qtext):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_daat_conjunctive_equals_logical(spark, docs_sf001, queries, tmp_path_factory):
+def test_daat_conjunctive_equals_logical(
+    spark, docs_sf001, queries, tmp_path_factory, daat_paths
+):
     from sparksearch.build import build_index
     from sparksearch.daat import daat_topk
     from sparksearch.querying import parse_queries, score_logical_conjunctive
@@ -60,16 +62,17 @@ def test_daat_conjunctive_equals_logical(spark, docs_sf001, queries, tmp_path_fa
             parse_queries(spark, queries), tf_df, dl_df, ts, k=10
         ).collect()
     }
-    for wand in (True, False):
-        physical = {
-            (r.query_id, r.rank): (r.doc_id, r.score)
-            for r in daat_topk(spark, path, queries, k=10, wand=wand,
-                               conjunctive=True).collect()
-        }
-        assert set(physical) == set(logical), wand
-        for key, (doc, score) in logical.items():
-            pdoc, pscore = physical[key]
-            assert pdoc == doc and abs(pscore - score) < 1e-9, (key, wand)
+    for how in daat_paths():
+        for wand in (True, False):
+            physical = {
+                (r.query_id, r.rank): (r.doc_id, r.score)
+                for r in daat_topk(spark, path, queries, k=10, wand=wand,
+                                   conjunctive=True).collect()
+            }
+            assert set(physical) == set(logical), (how, wand)
+            for key, (doc, score) in logical.items():
+                pdoc, pscore = physical[key]
+                assert pdoc == doc and abs(pscore - score) < 1e-9, (how, key, wand)
 
 
 def test_conjunctive_region_prune_is_lossless_and_tighter(

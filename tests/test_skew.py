@@ -47,7 +47,7 @@ def test_hot_terms_fan_out_over_ranges(spark, skewed_docs, tmp_path_factory):
         assert spread[term] >= 6, (term, spread)
 
 
-def test_rank_identity_on_skewed_corpus(spark, skewed_docs, tmp_path_factory):
+def test_rank_identity_on_skewed_corpus(spark, skewed_docs, tmp_path_factory, daat_paths):
     from sparksearch.build import build_index
     from sparksearch.daat import daat_topk
     from sparksearch.querying import bm25_topk_from_docs
@@ -63,10 +63,12 @@ def test_rank_identity_on_skewed_corpus(spark, skewed_docs, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("skewidx2"))
     build_index(spark, skewed_docs, path, n_buckets=8, n_ranges=8)
 
-    logical = bm25_topk_from_docs(spark, skewed_docs, queries, k=10).collect()
-    physical = daat_topk(spark, path, queries, k=10, wand=True).collect()
+    runs = [bm25_topk_from_docs(spark, skewed_docs, queries, k=10).collect()]
+    for _ in daat_paths():
+        for wand in (True, False):
+            runs.append(daat_topk(spark, path, queries, k=10, wand=wand).collect())
 
-    for rows in (logical, physical):
+    for rows in runs:
         got = {}
         for r in rows:
             got.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
