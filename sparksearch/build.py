@@ -1,16 +1,22 @@
 """B1–B5 + S4: physical inverted-index build (SURVEY.md §2.4).
 
-Segment layout (flat block rows — parquet-native so term/bucket predicates
-push down to the scan, no nested decode needed for pruning):
+One index layout (flat block rows — parquet-native so term/bucket
+predicates push down to the scan, no nested decode needed for pruning),
+grown one generation at a time. A single-shot build is generation 0; an
+incremental finalize (checkpoint.py) appends generation ``next_gen``. Both
+commit through ``_commit_generation``:
 
-    segments/bucket=<b>/*.parquet
+    segments/gen=<g>/bucket=<b>/*.parquet
       term, range_id, first_doc_id, last_doc_id, n, doc_gaps, tfs, dls,
       max_tf, min_dl (+ poss — the positional 4th varint stream — when the
       index is built with_positions; stats.json: positions="blocks")
-    dictionary/*.parquet
-      term, bucket, df, cf, idf, max_tf, min_dl
+    dictionary_gen_<g>/*.parquet      cumulative dictionary snapshot
+      term, df, cf, idf, max_tf, min_dl, bucket
+    dict_sorted_gen_<g>/, dict_rsorted_gen_<g>/   expansion sidecars
     stats.json   {n_docs, sum_dl, avgdl, range_size, n_ranges, n_buckets,
-                  block_size}
+                  block_size, n_gens, next_gen, dictionary_dir,
+                  dict_sorted_dir, dict_rsorted_dir, finalized_units,
+                  finalize_input_postings} — the commit point
 
 Scale design (BASELINE.json:6,14 — "salted repartitioning on term to defuse
 Zipfian term skew"):
@@ -43,6 +49,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -102,8 +109,8 @@ def _tok_tf_kernel(text_col: str, id_col: str, code_aware: bool = False,
     ``with_positions=True`` additionally emits ``pos_blob`` — the 1-based
     occurrence positions of term in doc, delta+varint encoded (first raw,
     then gaps; same LEB128 as the posting blocks) — from the SAME tokenize
-    pass: tokenization is the dominant map cost at corpus scale, and the
-    positional sidecar must never pay it twice (round-2 verdict item #3).
+    pass: tokenization is the dominant map cost at corpus scale, and
+    positions must never pay it twice (round-2 verdict item #3).
     The (doc_id, term, tf, dl, lead) values are identical in both modes
     (tf ≡ number of positions; lead ≡ first emitted row per doc)."""
 
@@ -256,14 +263,13 @@ def build_segments(
     range_size: int,
     n_buckets: int = 64,
     block_size: int = BLOCK_SIZE,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """B1–B4: postings → flat block rows with bucket column.
 
-    tf_df: [term, doc_id, tf(, dl)]; dl_df: [doc_id, dl] (legacy only). The
-    encoder is STATS-FREE (impact-pair block metadata, codec.py), so no
-    term-stats join touches the postings — when tf_df already carries dl
-    (the one-pass tokenize_tf path) the salted (tid, range_id) repartition
+    tf_df: [term, doc_id, tf, dl(, pos_blob)] — tokenize_tf output, which
+    carries dl; ``dl_df`` is unused (callers pass None). The encoder is
+    STATS-FREE (impact-pair block metadata, codec.py), so no term-stats
+    join touches the postings: the salted (tid, range_id) repartition
     below is the ONLY full-data exchange this function adds, moving exactly
     FOUR FIXED-WIDTH columns per posting: tid int64, doc_id int64, tf int32,
     dl int32 (+ the int32 range key). The term STRING never rides it —
@@ -289,10 +295,7 @@ def build_segments(
     positional build's exchange grows by ~avg_tf·2 bytes per posting while
     buying a single physical artifact for postings AND positions (one
     resume/compaction story, one pruned fetch at query time)."""
-    base = tf_df
-    if "dl" not in tf_df.columns:
-        base = base.join(dl_df, "doc_id")
-    with_positions = "pos_blob" in base.columns
+    with_positions = "pos_blob" in tf_df.columns
     cols = [
         F.xxhash64("term").alias("tid"),
         F.col("doc_id").alias("doc_id"),
@@ -304,12 +307,12 @@ def build_segments(
     ]
     if with_positions:
         cols.append(F.col("pos_blob"))
-    scored = base.select(*cols)
+    scored = tf_df.select(*cols)
     # tid → term restore map, O(vocab): ONE exchange whose payload is the
     # distinct vocabulary (collect_set partial-aggregates map-side, so each
     # task ships its local vocab once, not its postings).
     vocab = (
-        base.groupBy(F.xxhash64("term").alias("tid"))
+        tf_df.groupBy(F.xxhash64("term").alias("tid"))
         .agg(F.collect_set("term").alias("_terms"))
         .select(
             "tid",
@@ -322,7 +325,7 @@ def build_segments(
         )
     )
     # B1: deterministic salted repartition — hot terms fan out over ranges.
-    parts = shuffle_partitions or tf_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    parts = tf_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     salted = scored.repartition(int(parts), "tid", "range_id")
     # B2+B3: per-(tid, range) sort + block encode (NumPy inside Arrow batches).
     blocks = salted.groupBy("tid", "range_id").applyInPandas(
@@ -350,21 +353,22 @@ def build_index(
     n_buckets: int = 64,
     n_ranges: int | None = None,
     block_size: int = BLOCK_SIZE,
-    mode: str = "overwrite",
     code_aware: bool = False,
     with_positions: bool = False,
 ) -> dict:
-    """Full single-shot build: documents → segments + dictionary + stats.json.
+    """Full single-shot build: documents → generation 0 of the index at
+    ``index_path`` (``finalize_index``).
 
     For the resumable per-unit path see ``checkpoint.build_resumable`` — it
-    stages postings per source partition and then calls ``finalize_index``
-    over the committed units' postings. ``code_aware`` opts into identifier
-    splitting for source-code corpora (queries must then be tokenized with
-    tokenize.py_tokenize_code to match). ``with_positions=True`` folds
-    occurrence positions into the segment block rows as the 4th varint
-    stream (codec ``poss``; stats.json ``positions: blocks``) — from the
-    SAME single tokenize pass, through the SAME salted exchange: one corpus
-    read, one physical artifact for postings and positions.
+    stages postings per unit and commits each finalize as the next
+    generation through the same ``_commit_generation``. ``code_aware`` opts
+    into identifier splitting for source-code corpora (queries must then be
+    tokenized with tokenize.py_tokenize_code to match).
+    ``with_positions=True`` folds occurrence positions into the segment
+    block rows as the 4th varint stream (codec ``poss``; stats.json
+    ``positions: blocks``) — from the SAME single tokenize pass, through the
+    SAME salted exchange: one corpus read, one physical artifact for
+    postings and positions.
     """
     # ONE Arrow pass: tokenize + per-doc tf + dl (+ positions), all map-side.
     tf_df = tokenize_tf(
@@ -373,8 +377,49 @@ def build_index(
     )
     return finalize_index(
         spark, tf_df, index_path,
-        n_buckets=n_buckets, n_ranges=n_ranges, block_size=block_size, mode=mode,
+        n_buckets=n_buckets, n_ranges=n_ranges, block_size=block_size,
     )
+
+
+def _persist_observed(tf_df: DataFrame, *extra) -> tuple[DataFrame, dict]:
+    """Persist tokenize_tf postings and materialize them in ONE job that
+    also observes their totals: n_postings, n_docs and sum_dl (``lead``
+    marks one posting per doc, so per-doc sums are exact over posting rows
+    — no doc-aggregate job, no doc_id exchange), plus ``extra`` aggregates."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    tf_df = tf_df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_postings"),
+        F.sum(F.when(F.col("lead"), 1).otherwise(0)).alias("n_docs"),
+        F.sum(F.when(F.col("lead"), F.col("dl")).otherwise(0)).alias("sum_dl"),
+        *extra,
+    ).persist()
+    tf_df.count()
+    return tf_df, {k: int(v or 0) for k, v in obs.get.items()}
+
+
+#: Names a single-shot build replaces at its path: the layout's artifacts
+#: and a resumable build's geometry, manifest and unit postings. Anything
+#: else at the path is left alone.
+_INDEX_NAMES = ("segments", "build_meta.json", "manifest", "postings")
+_DICT_DIRS = ("dictionary", "dict_sorted", "dict_rsorted")
+
+
+def _clear_index(index_path: str) -> None:
+    """Remove this engine's artifacts from ``index_path``. stats.json stays
+    until the commit replaces it, so the new one is a new file (daat.py
+    keys its index cache on that identity)."""
+    if not os.path.isdir(index_path):
+        return
+    for name in os.listdir(index_path):
+        if name in _INDEX_NAMES or name.startswith(_DICT_DIRS):
+            p = os.path.join(index_path, name)
+            if os.path.isdir(p):
+                shutil.rmtree(p)
+            else:
+                os.remove(p)
 
 
 def finalize_index(
@@ -384,153 +429,166 @@ def finalize_index(
     n_buckets: int = 64,
     n_ranges: int | None = None,
     block_size: int = BLOCK_SIZE,
-    mode: str = "overwrite",
 ) -> dict:
-    """Stage II: (term, doc_id, tf[, dl, lead]) postings → segments +
-    dictionary + stats.
-
-    At cluster scale tf_df is the committed per-unit postings table on disk
-    (checkpoint.build_resumable) — every downstream branch re-reads cheap
-    columnar postings instead of re-tokenizing raw text.
-
-    Scaling-efficiency design (the serial/fixed costs here directly cap the
-    N→4N rule — every job barrier and every exchange was audited):
-
-    * global stats (n_docs, Σdl, max doc_id) ride an ``Observation`` on the
-      job that materializes the postings cache — no separate doc-aggregate
-      job, no doc_id exchange, one driver round-trip total. The ``lead``
-      flag (one True per doc) makes the per-doc sums exact over posting rows.
-    * the encoded block frame is cached once and the sinks (segments,
-      dictionary, its sorted sidecars) are written by CONCURRENT driver
-      threads — writes overlap instead of serializing commit barriers; the
-      dictionary's global block-max aggregates the cached blocks, not a
-      re-read of the just-written files.
-    * the only full-data exchange left in the whole build is the salted
-      (term, range_id) repartition feeding the encoder (build_segments).
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import Observation
-
+    """Stage II, single shot: tokenize_tf postings [doc_id, term, tf, dl,
+    lead(, pos_blob)] → generation 0 of a new index at ``index_path``,
+    replacing the index there. max(doc_id) rides the job that materializes
+    the postings and fixes ``range_size``; the rest is
+    ``_commit_generation``, the code every incremental finalize runs."""
     if n_ranges is None:
         n_ranges = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    has_lead = "lead" in tf_df.columns
-    if has_lead:
-        obs = Observation()
-        tf_df = tf_df.observe(
-            obs,
-            F.sum(F.when(F.col("lead"), 1).otherwise(0)).alias("n_docs"),
-            F.sum(F.when(F.col("lead"), F.col("dl")).otherwise(0)).alias("sum_dl"),
-            F.max("doc_id").alias("max_id"),
-        )
-        tf_df = tf_df.persist()
-        tf_df.count()  # materialize cache; stats ride this one job
-        m = obs.get
-        if not m["n_docs"]:  # None (no rows) or 0 — nothing to index
-            tf_df.unpersist()
+    tf_df, new = _persist_observed(tf_df, F.max("doc_id").alias("max_id"))
+    try:
+        if not new["n_docs"]:  # no rows, or only token-free docs
             raise ValueError(
                 "cannot build an index from an empty corpus "
                 "(0 documents with at least one token)"
             )
-        n_docs, avgdl, max_id = int(m["n_docs"]), m["sum_dl"] / m["n_docs"], int(m["max_id"])
-        sum_dl = int(m["sum_dl"])
-        dl_df = tf_df.filter("lead").select("doc_id", "dl")
-    else:
-        # Legacy path: bare (term, doc_id, tf) postings (no dl column).
-        tf_df = tf_df.persist()
-        dl_df = tf_df.groupBy("doc_id").agg(F.sum("tf").cast("int").alias("dl"))
-        srow = dl_df.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.avg("dl").alias("avgdl"),
-            F.max("doc_id").alias("max_id"),
-            F.sum("dl").alias("sum_dl"),
-        ).collect()[0]
-        if not srow["n_docs"]:
-            tf_df.unpersist()
-            raise ValueError(
-                "cannot build an index from an empty corpus "
-                "(0 documents with at least one token)"
-            )
-        n_docs, avgdl, max_id = int(srow["n_docs"]), float(srow["avgdl"]), int(srow["max_id"])
-        sum_dl = int(srow["sum_dl"])
+        geometry = {
+            "range_size": max(1, math.ceil((new["max_id"] + 1) / n_ranges)),
+            "n_ranges": int(n_ranges),
+            "n_buckets": int(n_buckets),
+            "block_size": int(block_size),
+        }
+        _clear_index(index_path)
+        return _commit_generation(spark, index_path, tf_df, new, geometry,
+                                  0, None, [])
+    finally:
+        tf_df.unpersist()
 
-    range_size = max(1, math.ceil((max_id + 1) / n_ranges))
-    # Literal 1-row stats frame (already collected) — keeps every downstream
-    # plan free of an embedded re-aggregation of dl_df.
-    stats_df = spark.createDataFrame([(n_docs, float(avgdl))], "n_docs long, avgdl double")
-    term_stats = with_idf(doc_freq(tf_df), stats_df)
+
+def _commit_generation(
+    spark: SparkSession,
+    index_path: str,
+    tf_df: DataFrame,
+    new: dict,
+    geometry: dict,
+    gen: int,
+    prev: dict | None,
+    units: list[int],
+) -> dict:
+    """Write generation ``gen`` (segments, dictionary snapshot, sorted
+    sidecars) and commit it in stats.json — the one writer of the layout:
+    ``finalize_index`` commits gen 0 with ``prev=None``,
+    ``checkpoint.finalize_incremental`` commits ``next_gen`` on top of the
+    committed ``prev`` stats. ``tf_df`` is the generation's persisted
+    postings and ``new`` their observed totals (``_persist_observed``);
+    ``geometry`` pins range_size, n_ranges, n_buckets and block_size;
+    ``units`` becomes ``finalized_units``.
+
+    The blocks are encoded once (the only full-data exchange, build_segments)
+    and cached; the three sinks run on CONCURRENT driver threads, and the
+    dictionary's impact pair aggregates the cached blocks, not the written
+    files. Crash safety: artifacts of ``gen`` that no stats.json recorded
+    are a crashed finalize's leftovers and are rebuilt; segments are written
+    under an underscore prefix (invisible to partition discovery) and
+    renamed into place; stats.json (atomic replace) is THE commit point,
+    after which superseded dictionary snapshots are removed."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    seg_root = os.path.join(index_path, "segments")
+    tmp_seg = os.path.join(seg_root, f"_tmp_gen_{gen}")
+    seg_gen = os.path.join(seg_root, f"gen={gen}")
+    for leftover in (tmp_seg, seg_gen) + tuple(
+        os.path.join(index_path, f"{d}_gen_{gen}") for d in _DICT_DIRS
+    ):
+        shutil.rmtree(leftover, ignore_errors=True)
+
+    n_docs = new["n_docs"] + (int(prev["n_docs"]) if prev else 0)
+    sum_dl = new["sum_dl"] + (int(prev["sum_dl"]) if prev else 0)
+    avgdl = sum_dl / n_docs
 
     seg = build_segments(
-        tf_df, dl_df, range_size, n_buckets, block_size
+        tf_df, None, geometry["range_size"], geometry["n_buckets"],
+        geometry["block_size"],
     ).persist()
     seg.count()  # run the one big exchange + encode; sinks below read cache
-    # Per-term global impact pair (stats-free, like the per-block pair): the
-    # query-time bound for a term anywhere in the index.
-    gmax = seg.groupBy("term").agg(
-        F.max("max_tf").alias("max_tf"), F.min("min_dl").alias("min_dl"),
-        F.first("bucket").alias("bucket"),
+    # Dictionary: the generation's term stats and per-term impact pair
+    # (stats-free, like the per-block pair: the query-time bound for a term
+    # anywhere in the index), merged with the committed snapshot — df/cf
+    # sum, impact pair max/min (both decompose over the disjoint doc sets of
+    # the generations); idf recomputed for every term from the new N.
+    # O(vocab), the only non-append artifact.
+    gmax_aggs = (F.max("max_tf").alias("max_tf"), F.min("min_dl").alias("min_dl"),
+                 F.first("bucket").alias("bucket"))
+    dic = doc_freq(tf_df).join(seg.groupBy("term").agg(*gmax_aggs), "term")
+    if prev is not None:
+        old = spark.read.parquet(os.path.join(index_path, prev["dictionary_dir"]))
+        dic = (
+            old.select(*dic.columns).unionByName(dic)
+            .groupBy("term")
+            .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"), *gmax_aggs)
+        )
+    stats_df = spark.createDataFrame(
+        [(n_docs, float(avgdl))], "n_docs long, avgdl double"
     )
     # Consumed by THREE sinks (dictionary, sorted sidecar, reversed sidecar)
     # — persist so the vocab-sized stats join runs once (self-join invariant).
-    dictionary = (
-        term_stats.select("term", "df", "cf", "idf").join(gmax, "term").persist()
-    )
+    dic = with_idf(dic, stats_df).select(
+        "term", "df", "cf", "idf", "max_tf", "min_dl", "bucket"
+    ).persist()
 
     def _w_segments():
-        seg.write.mode(mode).partitionBy("bucket").parquet(
-            os.path.join(index_path, "segments")
-        )
+        seg.write.mode("overwrite").partitionBy("bucket").parquet(tmp_seg)
+        os.rename(tmp_seg, seg_gen)
 
     def _w_dictionary():
-        dictionary.write.mode(mode).parquet(os.path.join(index_path, "dictionary"))
+        dic.write.mode("overwrite").parquet(
+            os.path.join(index_path, f"dictionary_gen_{gen}")
+        )
 
     def _w_dict_sidecars():
-        write_dictionary_sidecars(dictionary, index_path, mode=mode)
+        write_dictionary_sidecars(dic, index_path, gen)
 
     writers = [_w_segments, _w_dictionary, _w_dict_sidecars]
-
-    with ThreadPoolExecutor(max_workers=len(writers)) as pool:
-        futures = [pool.submit(w) for w in writers]
-        for f in futures:
-            f.result()
+    try:
+        with ThreadPoolExecutor(max_workers=len(writers)) as pool:
+            for f in [pool.submit(w) for w in writers]:
+                f.result()
+    finally:
+        seg.unpersist()
+        dic.unpersist()
 
     stats = {
-        "n_docs": n_docs,
-        "sum_dl": sum_dl,  # avgdl's numerator — lets resumes update avgdl O(1)
+        "n_docs": int(n_docs),
+        "sum_dl": int(sum_dl),  # avgdl's numerator — lets finalizes update avgdl O(1)
         "avgdl": float(avgdl),
-        "range_size": int(range_size),
-        "n_ranges": int(n_ranges),
-        "n_buckets": int(n_buckets),
-        "block_size": int(block_size),
-        "dict_sorted_dir": "dict_sorted",
-        "dict_rsorted_dir": "dict_rsorted",
+        "range_size": int(geometry["range_size"]),
+        "n_ranges": int(geometry["n_ranges"]),
+        "n_buckets": int(geometry["n_buckets"]),
+        "block_size": int(geometry["block_size"]),
+        "n_gens": (int(prev["n_gens"]) if prev else 0) + 1,
+        "next_gen": gen + 1,
+        "dictionary_dir": f"dictionary_gen_{gen}",
+        "dict_sorted_dir": f"dict_sorted_gen_{gen}",
+        "dict_rsorted_dir": f"dict_rsorted_gen_{gen}",
+        "finalized_units": sorted(units),
+        # posting rows THIS commit pushed through the salted exchange +
+        # encoder (the resume-cost audit the tests pin)
+        "finalize_input_postings": new["n_postings"],
     }
     if "pos_blob" in tf_df.columns:
         # Positions live IN the segment block rows (codec ``poss`` stream) —
         # phrase.py's pruned fetch keys off this marker.
         stats["positions"] = "blocks"
-    seg.unpersist()
-    dictionary.unpersist()
-    tf_df.unpersist()
     _write_json_atomic(os.path.join(index_path, "stats.json"), stats)  # commit
+    # Best-effort cleanup of superseded dictionary snapshots (post-commit).
+    for g in range(gen):
+        for d in _DICT_DIRS:
+            shutil.rmtree(os.path.join(index_path, f"{d}_gen_{g}"),
+                          ignore_errors=True)
     return stats
 
 
 def write_dictionary_sidecars(
-    dictionary: DataFrame,
-    index_path: str,
-    mode: str = "overwrite",
-    n_parts: int | None = None,
-    sorted_dir: str = "dict_sorted",
-    rsorted_dir: str = "dict_rsorted",
+    dictionary: DataFrame, index_path: str, gen: int
 ) -> None:
-    """Term-sorted + reversed-term-sorted dictionary sidecars — the range-
-    scan path for expansion queries (prefix/suffix/wildcard/fuzzy/regexp,
-    SURVEY.md §2; round-3 verdict item #5).
+    """Term-sorted + reversed-term-sorted dictionary sidecars of generation
+    ``gen`` — the range-scan path for expansion queries (prefix/suffix/
+    wildcard/fuzzy/regexp, SURVEY.md §2; round-3 verdict item #5).
 
-    ``dict_sorted``  [term, p2, df, cf, idf]  sorted by term per file;
-    ``dict_rsorted`` [rterm, term]            sorted by rterm per file.
+    ``dict_sorted_gen_<g>``  [term, p2, df, cf, idf]  sorted by term per file;
+    ``dict_rsorted_gen_<g>`` [rterm, term]            sorted by rterm per file.
 
     Each file is written hash-repartitioned on the sort key then
     sortWithinPartitions — every parquet ROW GROUP covers a tight key range,
@@ -545,54 +603,46 @@ def write_dictionary_sidecars(
     ``p2`` = the first ≤2 chars of term — the fuzzy band column: candidate
     bands push down as one IN(p2, [...]) filter (querying/search_ext
     ``*_indexed`` expanders). O(vocab) total — trivia next to the postings
-    exchange; rides the concurrent sink pool in ``finalize_index``."""
-    if n_parts is None:
-        n_parts = int(
-            dictionary.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+    exchange; rides the concurrent sink pool in ``_commit_generation``."""
+    n_parts = int(dictionary.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     (
         dictionary.select(
             "term", F.substring("term", 1, 2).alias("p2"), "df", "cf", "idf"
         )
         .repartition(n_parts, "term")
         .sortWithinPartitions("term")
-        .write.mode(mode)
-        .parquet(os.path.join(index_path, sorted_dir))
+        .write.mode("overwrite")
+        .parquet(os.path.join(index_path, f"dict_sorted_gen_{gen}"))
     )
     (
         dictionary.select(F.reverse(F.col("term")).alias("rterm"), "term")
         .repartition(n_parts, "rterm")
         .sortWithinPartitions("rterm")
-        .write.mode(mode)
-        .parquet(os.path.join(index_path, rsorted_dir))
+        .write.mode("overwrite")
+        .parquet(os.path.join(index_path, f"dict_rsorted_gen_{gen}"))
     )
 
 
 def load_sorted_dictionary(
     spark: SparkSession, index_path: str, reversed_: bool = False
 ) -> DataFrame:
-    """Read the term-sorted (or reversed-term-sorted) dictionary sidecar."""
+    """Read the committed term-sorted (or reversed-term-sorted) dictionary
+    sidecar."""
     with open(os.path.join(index_path, "stats.json")) as f:
         stats = json.load(f)
     key = "dict_rsorted_dir" if reversed_ else "dict_sorted_dir"
-    default = "dict_rsorted" if reversed_ else "dict_sorted"
-    return spark.read.parquet(os.path.join(index_path, stats.get(key, default)))
+    return spark.read.parquet(os.path.join(index_path, stats[key]))
 
 
 def load_index(spark: SparkSession, index_path: str):
-    """(segments_df, dictionary_df, stats_dict) from an index directory.
-
-    Works for both layouts: the single-shot flat layout (segments/bucket=*,
-    dictionary/) and the resumable generational layout (segments/gen=*/
-    bucket=*, dictionary_gen_<g> recorded in stats.json) — partition
-    discovery surfaces the extra ``gen`` column transparently and bucket
-    pruning still applies (checkpoint.py module docstring)."""
+    """(segments_df, dictionary_df, stats_dict) from an index directory:
+    every live generation under segments/ (partition discovery surfaces the
+    ``gen`` column transparently and bucket pruning still applies) and the
+    committed dictionary snapshot stats.json names."""
     with open(os.path.join(index_path, "stats.json")) as f:
         stats = json.load(f)
     seg = spark.read.parquet(os.path.join(index_path, "segments"))
-    dic = spark.read.parquet(
-        os.path.join(index_path, stats.get("dictionary_dir", "dictionary"))
-    )
+    dic = spark.read.parquet(os.path.join(index_path, stats["dictionary_dir"]))
     return seg, dic, stats
 
 

@@ -814,8 +814,8 @@ SELECT term, 'only_src0' AS which FROM (SELECT term FROM t0 EXCEPT SELECT term F
         "phrase_topk_indexed": QuerySpec(
             q_phrase_topk_indexed,
             _phrase_sql(),
-            "index-backed phrase search: bucketed positional sidecar "
-            "(delta+varint positions), pruned fetch of the phrase terms "
+            "index-backed phrase search: positions in the segment blocks "
+            "(delta+varint stream), pruned fetch of the phrase terms "
             "only, NumPy adjacency intersection — must equal the logical "
             "path and the SQL oracle exactly",
         ),
@@ -1164,7 +1164,7 @@ def build_round3_extras():
             q_phrase_topk_slop,
             _phrase_slop_sql(SLOP),
             f"ordered proximity phrase search (slop={SLOP}): greedy minimal "
-            "chain over the positional sidecar (vectorized searchsorted per "
+            "chain over the indexed positions (vectorized searchsorted per "
             "doc shard), span ≤ k−1+slop — Lucene sloppy-PhraseQuery-style, "
             "slop=0 degenerates to exact contiguity (tested)",
         ),

@@ -13,11 +13,17 @@ semantics are emulated with the ``parquet-manifest`` layout:
                                              record: lineage + metrics
     <index>/segments/gen=<g>/bucket=<b>/     finalized segment generations
     <index>/dictionary_gen_<g>/              cumulative dictionary snapshot
+    <index>/dict_sorted_gen_<g>/             its sorted expansion sidecars
+    <index>/dict_rsorted_gen_<g>/            (build.write_dictionary_sidecars)
     <index>/stats.json                       atomic COMMIT RECORD of the last
                                              finalize (totals + finalized
                                              units + current dictionary dir
                                              + live generation count n_gens
                                              + next_gen, the next unused id)
+
+All but build_meta.json, postings/ and manifest/ is the one index layout
+(build.py module docstring): a single-shot build writes the same artifacts
+through the same ``build._commit_generation``, as generation 0.
 
 Unit geometry (the round-3 incremental-merge design, SURVEY.md §3.3):
 units are CONTIGUOUS docID spans aligned to the segment range grid —
@@ -57,8 +63,12 @@ from datetime import datetime, timezone
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .build import _write_json_atomic, build_segments, tokenize_tf
-from .stats import doc_freq, with_idf
+from .build import (
+    _commit_generation,
+    _persist_observed,
+    _write_json_atomic,
+    tokenize_tf,
+)
 
 
 def unit_col(id_col: str, unit_span: int):
@@ -90,6 +100,13 @@ def build_geometry(
     if os.path.exists(meta_path):
         with open(meta_path) as f:
             return json.load(f)
+    if os.path.exists(os.path.join(index_path, "stats.json")):
+        # a single-shot index: its documents are in no unit, so appending
+        # units would count them twice
+        raise ValueError(
+            f"{index_path} holds a single-shot index; build resumably into "
+            "an empty path"
+        )
     max_id = docs.agg(F.max(id_col)).collect()[0][0]
     if max_id is None:
         raise ValueError("cannot build an index from an empty corpus")
@@ -177,10 +194,7 @@ def manifest_df(spark: SparkSession, index_path: str) -> DataFrame:
 def _commit_unit(index_path: str, rec: dict) -> None:
     d = manifest_dir(index_path)
     os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f".unit_{rec['partition_id']}.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, os.path.join(d, f"unit_{rec['partition_id']}.json"))  # atomic
+    _write_json_atomic(os.path.join(d, f"unit_{rec['partition_id']}.json"), rec)
 
 
 def build_unit(
@@ -242,8 +256,10 @@ def _next_gen(stats: dict) -> int:
 
 def finalize_incremental(spark: SparkSession, index_path: str) -> dict:
     """Stage II, incremental (SURVEY.md §3.3 "segment_union + merge"):
-    encode ONLY units committed since the last finalize, append them as a
-    new segment generation, and refresh the dictionary + global stats.
+    encode ONLY units committed since the last finalize and commit them as
+    generation ``next_gen`` (build._commit_generation — the same code a
+    single-shot build runs for generation 0), which appends a segment
+    generation and refreshes the dictionary + global stats.
 
     O(new units) data work + O(vocab) dictionary work. Old generations are
     never read — range-aligned units guarantee no (term, range) group spans
@@ -268,141 +284,35 @@ def finalize_incremental(spark: SparkSession, index_path: str) -> dict:
         out["finalize_input_postings"] = 0
         return out
 
-    gen = _next_gen(prev) if prev else 0
-    seg_root = os.path.join(index_path, "segments")
-    seg_gen = os.path.join(seg_root, f"gen={gen}")
-    dic_gen = os.path.join(index_path, f"dictionary_gen_{gen}")
-    # Crash recovery: stats.json is the commit record — artifacts of an
-    # unrecorded generation are leftovers of a crashed finalize; rebuild them.
-    for leftover in (
-        seg_gen, dic_gen,
-        os.path.join(index_path, f"dict_sorted_gen_{gen}"),
-        os.path.join(index_path, f"dict_rsorted_gen_{gen}"),
-    ):
-        shutil.rmtree(leftover, ignore_errors=True)
-
     tf_all = spark.read.parquet(os.path.join(index_path, "postings"))
     # Positional mode is a per-index invariant (every unit's postings carry
     # pos_blob, build_unit with_positions) — the new generation's blocks then
     # fold positions as the 4th varint stream, same as a single-shot build.
-    with_positions = "pos_blob" in tf_all.columns
     sel_cols = ["term", "doc_id", "tf", "dl", "lead"] + (
-        ["pos_blob"] if with_positions else []
+        ["pos_blob"] if "pos_blob" in tf_all.columns else []
     )
-    obs = Observation()
-    tf_new = (
+    tf_new, new = _persist_observed(
         tf_all.filter(F.col("unit_id").isin([int(u) for u in new_units]))
         .select(*sel_cols)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n_postings"),
-            F.sum(F.when(F.col("lead"), 1).otherwise(0)).alias("n_docs"),
-            F.sum(F.when(F.col("lead"), F.col("dl")).otherwise(0)).alias("sum_dl"),
-        )
-        .persist()
     )
-    tf_new.count()  # materialize; stats ride this one job
-    m = obs.get
-    new_postings = int(m["n_postings"] or 0)
-    if new_postings == 0:
-        # New units carried no postings (empty/token-free docs): just record
-        # them as finalized.
+    try:
+        if new["n_postings"] == 0:
+            # New units carried no postings (empty/token-free docs): just
+            # record them as finalized.
+            if prev is None:
+                raise ValueError("cannot finalize an index with zero postings")
+            out = dict(prev)
+            out["finalized_units"] = sorted(done | set(new_units))
+            out["finalize_input_postings"] = 0
+            _write_json_atomic(stats_path, out)
+            return out
+        # B1–B4 over the NEW postings only, with the PINNED range geometry.
+        return _commit_generation(
+            spark, index_path, tf_new, new, meta,
+            _next_gen(prev) if prev else 0, prev, sorted(done | set(new_units)),
+        )
+    finally:
         tf_new.unpersist()
-        if prev is None:
-            raise ValueError("cannot finalize an index with zero postings")
-        out = dict(prev)
-        out["finalized_units"] = sorted(done | set(new_units))
-        out["finalize_input_postings"] = 0
-        _write_json_atomic(stats_path, out)
-        return out
-
-    n_docs = (int(prev["n_docs"]) if prev else 0) + int(m["n_docs"])
-    sum_dl = (int(prev["sum_dl"]) if prev else 0) + int(m["sum_dl"])
-    avgdl = sum_dl / n_docs
-
-    # B1–B4 over the NEW postings only, with the PINNED range geometry.
-    seg_new = build_segments(
-        tf_new, None, meta["range_size"], meta["n_buckets"], meta["block_size"]
-    ).persist()
-    seg_new.count()  # one salted exchange + encode, O(new units)
-
-    # Segment generation: write under an underscore prefix (invisible to
-    # parquet partition discovery), then rename into place atomically.
-    tmp_seg = os.path.join(seg_root, f"_tmp_gen_{gen}")
-    shutil.rmtree(tmp_seg, ignore_errors=True)
-    seg_new.write.mode("overwrite").partitionBy("bucket").parquet(tmp_seg)
-    os.rename(tmp_seg, seg_gen)
-
-    # Dictionary refresh: merge the COMMITTED cumulative snapshot with the
-    # new units' term stats — df/cf sum, impact pair max/min (both decompose
-    # over the disjoint doc sets); idf recomputed for every term from the
-    # new N. O(vocab), the only non-append artifact.
-    new_ts = doc_freq(tf_new)  # term, df, cf
-    new_gm = seg_new.groupBy("term").agg(
-        F.max("max_tf").alias("max_tf"), F.min("min_dl").alias("min_dl"),
-        F.first("bucket").alias("bucket"),
-    )
-    new_dic = new_ts.join(new_gm, "term")
-    if prev is not None:
-        old_dic = spark.read.parquet(
-            os.path.join(index_path, prev["dictionary_dir"])
-        ).select("term", "df", "cf", "max_tf", "min_dl", "bucket")
-        merged = (
-            old_dic.unionByName(new_dic.select(old_dic.columns))
-            .groupBy("term")
-            .agg(
-                F.sum("df").alias("df"), F.sum("cf").alias("cf"),
-                F.max("max_tf").alias("max_tf"), F.min("min_dl").alias("min_dl"),
-                F.first("bucket").alias("bucket"),
-            )
-        )
-    else:
-        merged = new_dic
-    stats_df = spark.createDataFrame(
-        [(n_docs, float(avgdl))], "n_docs long, avgdl double"
-    )
-    # Consumed by three sinks (dictionary + the two sorted expansion
-    # sidecars, O(vocab) each) — persist the merged frame once.
-    final_dic = with_idf(merged, stats_df).select(
-        "term", "df", "cf", "idf", "max_tf", "min_dl", "bucket"
-    ).persist()
-    final_dic.write.mode("overwrite").parquet(dic_gen)
-    from .build import write_dictionary_sidecars
-
-    write_dictionary_sidecars(
-        final_dic, index_path,
-        sorted_dir=f"dict_sorted_gen_{gen}", rsorted_dir=f"dict_rsorted_gen_{gen}",
-    )
-    final_dic.unpersist()
-
-    seg_new.unpersist()
-    tf_new.unpersist()
-
-    stats = {
-        "n_docs": int(n_docs),
-        "sum_dl": int(sum_dl),
-        "avgdl": float(avgdl),
-        "range_size": int(meta["range_size"]),
-        "n_ranges": int(meta["n_ranges"]),
-        "n_buckets": int(meta["n_buckets"]),
-        "block_size": int(meta["block_size"]),
-        "n_gens": (int(prev["n_gens"]) if prev else 0) + 1,
-        "next_gen": gen + 1,
-        "dictionary_dir": f"dictionary_gen_{gen}",
-        "dict_sorted_dir": f"dict_sorted_gen_{gen}",
-        "dict_rsorted_dir": f"dict_rsorted_gen_{gen}",
-        "finalized_units": sorted(done | set(new_units)),
-        "finalize_input_postings": new_postings,
-    }
-    if with_positions:
-        stats["positions"] = "blocks"
-    _write_json_atomic(stats_path, stats)  # THE commit point
-    # Best-effort cleanup of superseded dictionary snapshots (post-commit).
-    for g in range(gen):
-        for d in ("dictionary_gen", "dict_sorted_gen", "dict_rsorted_gen"):
-            shutil.rmtree(os.path.join(index_path, f"{d}_{g}"),
-                          ignore_errors=True)
-    return stats
 
 
 def compact_index(spark: SparkSession, index_path: str) -> dict:

@@ -1,8 +1,8 @@
 """Driver-side replica of Spark's ``xxhash64`` (XXH64, seed 42) so query
 planning can compute partition keys WITHOUT launching a Spark job.
 
-The positional sidecar and segment layout bucket terms with
-``pmod(xxhash64(term), n_buckets)`` (build.py, phrase.write_positions).
+The segment layout buckets terms with ``pmod(xxhash64(term), n_buckets)``
+(build.build_segments).
 At query time the engine needs the bucket ids of a handful of query terms
 to drive parquet partition pruning; paying a full Spark job (collect) for
 ~10 string hashes added ~0.7 s of fixed latency to EVERY index-backed

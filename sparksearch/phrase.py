@@ -125,59 +125,6 @@ def phrase_counts(docs: DataFrame, phrase: str, text_col: str = "text",
     )
 
 
-def write_positions(
-    tt: DataFrame, index_path: str, n_buckets: int, mode: str = "overwrite"
-) -> None:
-    """Write the positional sidecar ``<index>/positions/bucket=<b>`` from a
-    ``tokenize_tf(..., with_positions=True)`` frame (doc_id, term, tf,
-    pos_blob, …): rows (term, doc_id, npos, pos_blob) — the 1-based
-    occurrence positions of term in doc, delta+varint encoded (first raw,
-    then gaps; same LEB128 as the posting blocks). ADDITIVE artifact: the
-    main segment layout is untouched; phrase queries prune it by
-    (bucket, term) exactly like Q2. Map-only projection + bucketed write —
-    no shuffle, no extra tokenize."""
-    import json
-    import os
-
-    out = tt.select(
-        "term",
-        F.col("doc_id").cast("long").alias("doc_id"),
-        F.col("tf").cast("int").alias("npos"),  # npos ≡ tf by construction
-        "pos_blob",
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
-    )
-    out.write.mode(mode).partitionBy("bucket").parquet(
-        os.path.join(index_path, "positions")
-    )
-    with open(os.path.join(index_path, "positions_meta.json"), "w") as f:
-        json.dump({"n_buckets": int(n_buckets)}, f)
-
-
-def build_positions(
-    spark,
-    docs: DataFrame,
-    index_path: str,
-    n_buckets: int = 64,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """Standalone positional-sidecar build: ONE vectorized Arrow pass — the
-    same ``build.tokenize_tf(with_positions=True)`` kernel the main index
-    build uses, so positions are never produced by a second tokenize of the
-    corpus (round-2 verdict #3). When building index + sidecar together,
-    prefer ``build.build_index(..., with_positions=True)``: one corpus read
-    feeds all four sinks."""
-    from .build import tokenize_tf
-
-    tt = tokenize_tf(
-        docs.select(F.col(id_col).cast("long").alias("doc_id"), text_col),
-        text_col, with_positions=True,
-    )
-    write_positions(tt, index_path, n_buckets, mode=mode)
-
-
 def _decode_position_rows(blocks: DataFrame) -> DataFrame:
     """Segment block rows (positional layout) → per-posting position rows
     [term, doc_id, npos, pos_blob] — the shape every index-backed positional
@@ -234,43 +181,31 @@ def _pruned_position_fetch(
     pushdown on term, like Q2) and attach query_ids via a broadcast join →
     DF[term, doc_id, npos, pos_blob, query_id].
 
-    Two layouts: the current in-block stream (stats.json
-    ``positions: "blocks"`` — positions are the 4th varint stream of the
-    segment rows, so the fetch prunes the SAME artifact DAAT does, across
-    every generation of a resumable index) and the legacy standalone
-    sidecar (``<index>/positions`` + positions_meta.json)."""
+    Positions are the 4th varint stream of the segment block rows
+    (stats.json ``positions: "blocks"``), so the fetch prunes the SAME
+    artifact DAAT does, across every generation of the index. The bucket
+    per term comes from the driver-side xxhash64 replica (bit-identical to
+    the writer's pmod(xxhash64(term), n); tests/test_hashing.py), so the
+    pruning literals cost no Spark job."""
     import json
     import os
 
     from .hashing import term_bucket
 
     all_terms = sorted({t for _, t in qterm_pairs})
-    stats_path = os.path.join(index_path, "stats.json")
-    in_blocks = False
-    if os.path.exists(stats_path):
-        with open(stats_path) as f:
-            st = json.load(f)
-        in_blocks = st.get("positions") == "blocks"
-    if in_blocks:
-        n_buckets = int(st["n_buckets"])
-        seg = spark.read.parquet(os.path.join(index_path, "segments"))
-        buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
-        pruned_blocks = seg.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)
-        ).select("term", "first_doc_id", "doc_gaps", "tfs", "poss")
-        pruned = _decode_position_rows(pruned_blocks)
-    else:
-        pos = spark.read.parquet(os.path.join(index_path, "positions"))
-        with open(os.path.join(index_path, "positions_meta.json")) as f:
-            n_buckets = int(json.load(f)["n_buckets"])
-        # bucket per term — the driver-side xxhash64 replica (bit-identical
-        # to the writer's pmod(xxhash64(term), n); tests/test_hashing.py)
-        # computes the pruning literals WITHOUT a Spark job (was ~0.7 s per
-        # query here).
-        buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
-        pruned = pos.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(all_terms)
+    with open(os.path.join(index_path, "stats.json")) as f:
+        st = json.load(f)
+    if st.get("positions") != "blocks":
+        raise ValueError(
+            f"{index_path} holds no positions; build it with_positions=True"
         )
+    n_buckets = int(st["n_buckets"])
+    seg = spark.read.parquet(os.path.join(index_path, "segments"))
+    buckets = sorted({term_bucket(t, n_buckets) for t in all_terms})
+    pruned = _decode_position_rows(
+        seg.filter(F.col("bucket").isin(buckets) & F.col("term").isin(all_terms))
+        .select("term", "first_doc_id", "doc_gaps", "tfs", "poss")
+    )
     qterms = spark.createDataFrame(
         sorted(qterm_pairs), "query_id long, term string"
     )
@@ -321,7 +256,7 @@ def phrase_topk_indexed(
     """Index-backed batch phrase search → DF[query_id, rank, doc_id,
     n_occurrences] — identical output to the logical ``phrase_topk``
     (tested), but reads ONLY the phrase terms' position rows from the
-    bucketed sidecar (partition pruning on bucket + predicate pushdown on
+    segment blocks (partition pruning on bucket + predicate pushdown on
     term, like Q2), then checks adjacency with NumPy set intersections in
     one grouped Arrow pass per doc shard."""
     import numpy as np
@@ -516,7 +451,7 @@ def span_near_topk(docs: DataFrame, queries: list[tuple[int, str, int]],
     Same single-corpus-pass batch shape as phrase_topk: positional postings
     restricted to the union of all queries' terms, ONE per-doc term→positions
     map, every query's minimal cover span a column expression over that map.
-    The positional-sidecar fetch (phrase_topk_indexed) is the upgrade path
+    The pruned positional fetch (phrase_topk_indexed) is the upgrade path
     at index-backed scale; semantics are pinned here."""
     spark = docs.sparkSession
     qdefs = {}

@@ -73,11 +73,13 @@ def _index_for(spark: SparkSession, sf_dir: str) -> str:
 
         from .build import build_index
 
-        # v3 layout salt: round 4 added the sorted-dictionary expansion
+        # Layout salt: round 4 added the sorted-dictionary expansion
         # sidecars (v2) and folded positions into the segment block rows as
-        # the 4th varint stream (v3) — a marker-complete older artifact must
-        # not be reused.
-        path = f"/tmp/sparksearch_index_{hashlib.sha256((key + '|v3').encode()).hexdigest()[:12]}"
+        # the 4th varint stream (v3); a single-shot build now writes the
+        # generational layout, gen=0 (v6 — v4 and v5 name flat-layout
+        # artifacts of earlier builds) — a marker-complete older artifact
+        # must not be reused.
+        path = f"/tmp/sparksearch_index_{hashlib.sha256((key + '|v6').encode()).hexdigest()[:12]}"
         # with_positions: positions ride the SAME tokenize pass and the SAME
         # salted exchange into the segment blocks (build.py) — one corpus
         # read and one artifact serve the physical-index AND phrase entries

@@ -62,10 +62,12 @@ def test_phrase_topk_order_and_rank(spark, docs_sf0001):
 
 
 def test_indexed_phrase_equals_logical(spark, docs_sf0001, tmp_path):
-    from sparksearch.phrase import build_positions, phrase_topk_indexed
+    from sparksearch.build import build_index
+    from sparksearch.phrase import phrase_topk_indexed
 
     path = str(tmp_path / "posidx")
-    build_positions(spark, docs_sf0001, path, n_buckets=8)
+    build_index(spark, docs_sf0001, path, n_buckets=8, n_ranges=4,
+                with_positions=True)
     phrases = [(1, "hash join"), (2, "sort merge join"), (3, "dup"), (4, "join")]
     logical = {
         (r.query_id, r.rank): (r.doc_id, r.n_occurrences)
@@ -83,15 +85,15 @@ def test_combined_build_positions_in_one_tokenize_pass(spark, docs_sf0001, tmp_p
     block rows (the 4th varint stream — round-3 verdict #6) from the SAME
     single tokenize pass as the postings (round-2 verdict #3):
     build.tokenize_tf is invoked exactly once, no positional sidecar is
-    written, and the decoded per-posting position rows equal a standalone
-    build_positions sidecar byte for byte."""
+    written, and the decoded per-posting position rows equal the
+    tokenizer's positional postings byte for byte."""
     import json
     import os
 
+    from pyspark.sql import functions as F
+
     import sparksearch.build as B
-    from sparksearch.phrase import (
-        _decode_position_rows, build_positions, phrase_topk_indexed,
-    )
+    from sparksearch.phrase import _decode_position_rows, phrase_topk_indexed
 
     calls = []
     real = B.tokenize_tf
@@ -112,32 +114,37 @@ def test_combined_build_positions_in_one_tokenize_pass(spark, docs_sf0001, tmp_p
         assert json.load(f)["positions"] == "blocks"
     assert not os.path.exists(os.path.join(combined, "positions"))
 
-    standalone = str(tmp_path / "standalone")
-    build_positions(spark, docs_sf0001, standalone, n_buckets=8)
     cols = ["term", "doc_id", "npos", "pos_blob"]
     seg = spark.read.parquet(f"{combined}/segments")
     a = sorted(map(tuple, _decode_position_rows(
         seg.select("term", "first_doc_id", "doc_gaps", "tfs", "poss")
     ).select(cols).collect()))
-    b = sorted(map(tuple, spark.read.parquet(f"{standalone}/positions").select(cols).collect()))
+    tt = B.tokenize_tf(docs_sf0001.select("doc_id", "text"), with_positions=True)
+    b = sorted(map(tuple, tt.select(
+        "term", F.col("doc_id").cast("long").alias("doc_id"),
+        F.col("tf").cast("int").alias("npos"), "pos_blob",
+    ).collect()))
     assert a == b and a
 
-    # and the combined index answers phrase queries identically
+    # and the combined index answers phrase queries like the logical path
     phrases = [(1, "hash join"), (2, "join")]
-    ca = sorted(map(tuple, phrase_topk_indexed(spark, combined, phrases, k=5).collect()))
-    cb = sorted(map(tuple, phrase_topk_indexed(spark, standalone, phrases, k=5).collect()))
+    out = ["query_id", "rank", "doc_id", "n_occurrences"]
+    ca = sorted(map(tuple, phrase_topk_indexed(spark, combined, phrases, k=5)
+                    .select(out).collect()))
+    cb = sorted(map(tuple, phrase_topk(docs_sf0001, phrases, k=5).select(out).collect()))
     assert ca == cb and ca
 
 
 def test_indexed_phrase_edge_cases(spark, tmp_path):
-    from sparksearch.phrase import build_positions, phrase_topk_indexed
+    from sparksearch.build import build_index
+    from sparksearch.phrase import phrase_topk_indexed
 
     docs = spark.createDataFrame(
         [(1, "a b c a b c x"), (2, "a a b b c"), (3, "c b a")],
         "doc_id long, text string",
     )
     path = str(tmp_path / "posidx2")
-    build_positions(spark, docs, path, n_buckets=4)
+    build_index(spark, docs, path, n_buckets=4, n_ranges=2, with_positions=True)
     rows = phrase_topk_indexed(
         spark, path, [(1, "a b c"), (2, "b c"), (3, "a b a"), (4, "zzz")], k=10
     ).collect()
@@ -226,10 +233,11 @@ def test_slop_matches_bruteforce_and_zero_equals_contiguous(spark):
 
 def test_indexed_slop_equals_logical(spark, docs_sf0001, tmp_path):
     from sparksearch.catalog_pipeline import PHRASES
-    from sparksearch.phrase import build_positions, phrase_topk, phrase_topk_indexed
+    from sparksearch.build import build_index
+    from sparksearch.phrase import phrase_topk, phrase_topk_indexed
 
     idx = str(tmp_path / "posidx")
-    build_positions(spark, docs_sf0001, idx)
+    build_index(spark, docs_sf0001, idx, with_positions=True)
     for slop in (0, 2):
         logical = phrase_topk(docs_sf0001, PHRASES, k=10, slop=slop).collect()
         indexed = phrase_topk_indexed(spark, idx, PHRASES, k=10, slop=slop).collect()
@@ -331,10 +339,12 @@ def test_span_near_huge_slop_is_conjunctive_containment(spark, docs_sf0001):
 
 
 def test_indexed_span_near_equals_logical(spark, docs_sf0001, tmp_path):
-    from sparksearch.phrase import build_positions, span_near_topk, span_near_topk_indexed
+    from sparksearch.build import build_index
+    from sparksearch.phrase import span_near_topk, span_near_topk_indexed
 
     path = str(tmp_path / "posidx_sn")
-    build_positions(spark, docs_sf0001, path, n_buckets=8)
+    build_index(spark, docs_sf0001, path, n_buckets=8, n_ranges=4,
+                with_positions=True)
     queries = [
         (1, "hash join", 3),
         (2, "scan filter query", 5),
@@ -429,14 +439,15 @@ def test_span_near_ordered_dominated_by_unordered(spark, docs_sf0001):
 
 
 def test_indexed_ordered_span_near_equals_logical(spark, docs_sf0001, tmp_path):
+    from sparksearch.build import build_index
     from sparksearch.phrase import (
-        build_positions,
         span_near_ordered_topk,
         span_near_ordered_topk_indexed,
     )
 
     path = str(tmp_path / "posidx_osn")
-    build_positions(spark, docs_sf0001, path, n_buckets=8)
+    build_index(spark, docs_sf0001, path, n_buckets=8, n_ranges=4,
+                with_positions=True)
     queries = [
         (1, "hash join", 3),
         (2, "join hash", 3),             # reversal — distinct ordered result

@@ -245,6 +245,95 @@ def test_finalize_after_compaction_matches_single_shot(
     assert a == b and a
 
 
+DIC_COLS = ["term", "df", "cf", "idf", "max_tf", "min_dl", "bucket"]
+
+
+def _dictionary_sorted(spark, path):
+    _, dic, _ = load_index(spark, path)
+    return sorted(map(tuple, dic.select(DIC_COLS).collect()))
+
+
+def test_single_shot_build_is_generation_zero(spark, docs_sf0001, tmp_path):
+    """One index layout: a single-shot build commits generation 0 through
+    the incremental finalize's code, so it equals a one-unit resumable
+    build — segments, dictionary and stats — and compaction has nothing
+    to do."""
+    from sparksearch.build import build_index
+    from sparksearch.checkpoint import compact_index
+
+    single = str(tmp_path / "single")
+    build_index(spark, docs_sf0001, single, n_buckets=8, n_ranges=4)
+    res = str(tmp_path / "res")
+    build_resumable(spark, docs_sf0001, res, n_units=1, n_buckets=8, n_ranges=4)
+
+    d1, s1 = _segments_sorted(spark, single)
+    d2, s2 = _segments_sorted(spark, res)
+    assert d1 == d2 and d1
+    assert _dictionary_sorted(spark, single) == _dictionary_sorted(spark, res)
+    for key in ("n_docs", "sum_dl", "avgdl", "range_size", "n_buckets",
+                "block_size"):
+        assert s1[key] == s2[key], key
+    seg_root = os.path.join(single, "segments")
+    assert os.listdir(seg_root) == ["gen=0"]
+    assert (s1["n_gens"], s1["next_gen"], s1["dictionary_dir"]) == (
+        1, 1, "dictionary_gen_0")
+
+    stats_path = os.path.join(single, "stats.json")
+    before = os.stat(stats_path)
+    assert compact_index(spark, single) == s1
+    after = os.stat(stats_path)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino, before.st_mtime_ns)
+    assert os.listdir(seg_root) == ["gen=0"]
+    assert _segments_sorted(spark, single)[0] == d1
+
+
+def test_single_shot_rebuild_replaces_a_resumable_index(
+    spark, docs_sf0001, queries, tmp_path
+):
+    """build_index at a path that holds a two-generation resumable index
+    replaces it: decoded postings and top-k answers equal a fresh build.
+    The old units go with it, so a following finalize_incremental fails on
+    the missing geometry instead of appending them onto generation 0."""
+    from sparksearch.build import build_index, decoded_postings
+    from sparksearch.checkpoint import (
+        build_geometry,
+        build_unit,
+        finalize_incremental,
+    )
+    from sparksearch.daat import daat_topk
+
+    fresh = str(tmp_path / "fresh")
+    build_index(spark, docs_sf0001, fresh, n_buckets=8, n_ranges=4)
+
+    path = str(tmp_path / "idx")
+    meta = build_geometry(spark, docs_sf0001, path, 4, 4, 8, 128)
+    for u in (0, 1):
+        build_unit(spark, docs_sf0001, path, u, meta["unit_span"])
+    finalize_incremental(spark, path)
+    for u in (2, 3):
+        build_unit(spark, docs_sf0001, path, u, meta["unit_span"])
+    assert finalize_incremental(spark, path)["n_gens"] == 2
+
+    st = build_index(spark, docs_sf0001, path, n_buckets=8, n_ranges=4)
+    assert (st["n_gens"], st["next_gen"]) == (1, 1)
+    assert os.listdir(os.path.join(path, "segments")) == ["gen=0"]
+
+    def decoded(p):
+        seg, _, _ = load_index(spark, p)
+        return sorted(map(tuple, decoded_postings(seg).collect()))
+
+    assert decoded(path) == decoded(fresh)
+    assert _dictionary_sorted(spark, path) == _dictionary_sorted(spark, fresh)
+    a = sorted(map(tuple, daat_topk(spark, fresh, queries, k=10).collect()))
+    b = sorted(map(tuple, daat_topk(spark, path, queries, k=10).collect()))
+    assert a == b and a
+
+    with pytest.raises(FileNotFoundError, match="build_meta.json"):
+        finalize_incremental(spark, path)
+    with pytest.raises(ValueError, match="single-shot"):
+        build_geometry(spark, docs_sf0001, path, 4, 4, 8, 128)
+
+
 def test_noop_resume(spark, docs_sf0001, tmp_path):
     path = str(tmp_path / "idx")
     build_resumable(spark, docs_sf0001, path, n_units=4, n_buckets=8, n_ranges=4)
